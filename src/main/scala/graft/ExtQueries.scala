@@ -1373,13 +1373,8 @@ object ExtQueries {
     }),
     "similarity_ann_embeddings" -> ((s: SparkSession, dir: String) => {
       val e = embs(s, dir)
-      // the query-time plan: sketch semi-join pruning. The FILE-pruned
-      // variant (writeSketchBuckets → annTopKBucketed, spec-proven
-      // row-identical) consumes an OFFLINE index build — rebuilding a
-      // ~2^16-directory layout inside every query evaluation is an
-      // index build's cost, not a query's, so the declared query
-      // measures retrieval only (unlike IVF's 16-partition layout,
-      // which is cheap enough to build in-query)
+      // the query-time plan: sketch semi-join pruning over the
+      // unpartitioned table (the pruning is of compute, not of files)
       Similarity.annTopK(e, Similarity.defaultProbe(e))
     }),
     "similarity_pq_embeddings" -> ((s: SparkSession, dir: String) => {
@@ -1639,8 +1634,7 @@ object ExtQueries {
       // the retrieval capstone as a declared key: the batch kNN JOIN
       // through the PRODUCTION stack (IVF cell restriction -> PQ ADC
       // shortlist in the compressed domain -> exact re-rank of
-      // survivors), probes as DATA — the exact kernel the streaming
-      // serving face (StreamSimilarity.topKBatchPq) runs, here
+      // survivors), probes as DATA — Similarity.knnJoinPq, here
       // oracle-gated end to end; same bounded probe batch as the
       // exact-kernel key above
       val e = embs(s, dir)

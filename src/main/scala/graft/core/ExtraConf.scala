@@ -2,10 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Env-driven session-config overlay for the driver-invoked mains
-  * (Bench / BenchOne / ProfileOne / Verify): `SPARK_GRAFT_EXTRA_CONF`
-  * holds `;`-separated `key=value` pairs applied on top of each main's
-  * fixed defaults. Two uses:
+/** Env-driven session-config overlay for the single-key mains
+  * (BenchOne / ProfileOne — Bench and Verify do not apply it):
+  * `SPARK_GRAFT_EXTRA_CONF` holds `;`-separated `key=value` pairs
+  * applied on top of each main's fixed defaults. Two uses:
   *
   *  - A/B measurement without recompiling (the optimization guide's
   *    "measure first" loop): run the same key under candidate configs
@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - Deployment-scale overrides (executor counts, shuffle sizing)
   *    that must never be hard-coded into the bench contract.
   *
-  * Unset (the driver's posture) it is a no-op, so the bench methodology
-  * is unchanged unless a human explicitly asks for an overlay.
+  * Unset it is a no-op, so a single-key measurement runs under the
+  * mains' defaults unless an overlay is explicitly asked for.
   */
 object ExtraConf {
   def apply(b: SparkSession.Builder): SparkSession.Builder = {

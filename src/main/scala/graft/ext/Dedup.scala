@@ -105,22 +105,10 @@ object Dedup {
   val Bands = 4              // default LSH bands (r = K/Bands rows per band)
   val MaxBucket = 64         // skew guard: drop degenerate band buckets
 
-  /** Word n-gram shingles of normalized text (default 3-gram). */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val words = split(TextStats.normText(text), " ")
-    when(size(words) < n, array(concat_ws(" ", words)))
-      .otherwise(transform(
-        sequence(lit(0), size(words) - n),
-        i => concat_ws(" ", slice(words, i + 1, lit(n)))))
-  }
-
-  /** MinHash signature: array<bigint> of length K. Hash each shingle once
-    * (xxhash64), then K affine permutations, min-reduced per permutation.
-    * Pure array expressions — no UDF, no extra shuffle.
-    */
-  /** Codegen'd custom expression (graft.functions.MinHashSigExpr):
-    * one tight JVM pass per row vs K interpreted ArrayAggregates
-    * (~20× faster on the bench at identical semantics).
+  /** MinHash signature, array<bigint> of length K — a codegen'd custom
+    * expression (graft.functions.MinHashSigExpr): one tight JVM pass per
+    * row vs K interpreted ArrayAggregates (~20× faster on the bench at
+    * identical semantics).
     */
   def minHashSignature(text: Column, k: Int = MinHashK): Column =
     graft.functions.GraftFunctions.minhashSig(text, k)

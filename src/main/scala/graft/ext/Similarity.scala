@@ -100,76 +100,8 @@ object Similarity {
       .limit(k)
   }
 
-  /** Persist a sketched vector table PARTITIONED by its hyperplane
-    * sketch — the ANN twin of [[writeClustered]]. With `planes = 16`
-    * the layout has ≤ 2^16 partitions; at 100 TB that is ~1.5 GB of
-    * parquet per bucket (the right file granularity), and a probe
-    * enumerates its ≤ maxHamming neighborhood as id literals that prune
-    * FILES at listing time, instead of the post-scan semi-join that
-    * prunes only compute.
-    */
-  def writeSketchBuckets(
-      embeddings: DataFrame,
-      path: String,
-      dim: Int = 64,
-      planes: Int = 16): Unit =
-    embeddings
-      .withColumn("sk", hyperplaneSketch(col("embedding"), dim, planes))
-      // co-locate each bucket before writing: without this, every input
-      // task emits a file for every sketch it encounters (tasks ×
-      // buckets tiny files); with it the layout is one file per bucket
-      // — the shuffle IS the index-build cost, paid offline, once
-      .repartition(col("sk"))
-      .write.mode("overwrite").partitionBy("sk").parquet(path)
-
-  /** All sketch values within `maxHamming` bits of the probe's sketch —
-    * pure driver-side bit enumeration (Σ C(planes,i), i ≤ maxHamming:
-    * 697 values for planes=16, h≤3), no cluster work. The probe sketch
-    * itself comes from a 1-row local evaluation of the SAME codegen
-    * kernel the table was written with.
-    */
-  def probeSketchIds(
-      spark: SparkSession,
-      probe: Seq[Float],
-      dim: Int = 64,
-      planes: Int = 16,
-      maxHamming: Int = 3): Seq[Long] = {
-    val psk = spark.range(1)
-      .select(hyperplaneSketch(array(probe.map(lit): _*), dim, planes).as("psk"))
-      .collect()(0).getLong(0)
-    def flips(bits: Seq[Int]): Long = bits.foldLeft(psk)((s, b) => s ^ (1L << b))
-    (0 to maxHamming).flatMap(h =>
-      (0 until planes).combinations(h).map(flips)).distinct
-  }
-
-  /** ANN top-k over a [[writeSketchBuckets]] layout: the neighborhood's
-    * sketch literals reach the scan as `PartitionFilters` — file listing
-    * and IO are bounded by the bucket neighborhood before any row is
-    * read. Row-for-row identical to [[annTopK]] on the same data
-    * (the semi-join over distinct sketches and the isin over the full
-    * neighborhood keep exactly the same rows).
-    */
-  def annTopKBucketed(
-      bucketed: DataFrame,
-      probeIds: Seq[Long],
-      probe: Seq[Float],
-      k: Int = 10): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
-    bucketed
-      .filter(col("sk").isin(probeIds: _*))
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), probeCol), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
-  }
-
   // ------------------------------------------------------------------ IVF
 
-  /** IVF index: deterministic centroids (the first `nCentroids` vectors
-    * by vec_id — a stand-in for k-means, which would converge on real
-    * data); every vector assigned to its nearest centroid in one pass
-    * with the centroid set broadcast.
-    */
   /** Seed centroids: the first `nCentroids` vectors by vec_id — the
     * deterministic k-means init (k-means++ would sharpen it; the seeds
     * only need to be spread enough for Lloyd to converge).
@@ -1007,9 +939,9 @@ object Similarity {
 
   /** The propagation output projection (`vec_id, label, pred_label,
     * vote_w, n_votes, agrees`, total order) from a final winner frame
-    * — ONE text for [[labelPropagate]], [[labelPropagateIter]], and
-    * [[labelPropagateConverged]], so the declared keys and the
-    * operational loop can never drift in their output semantics.
+    * — ONE text for [[labelPropagate]] and [[labelPropagateIter]], so
+    * the one-round and iterated keys can never drift in their output
+    * semantics.
     */
   private def propagationOutput(
       embeddings: DataFrame, winner: DataFrame): DataFrame =
@@ -1178,128 +1110,6 @@ object Similarity {
     propagationOutput(embeddings, lastWinner)
   }
 
-  /** [[knnGraphRefineIter]] run to CONVERGENCE instead of fixed depth —
-    * NN-Descent's natural stopping rule (Dong et al. 2011 iterate
-    * "until few updates occur"): rounds repeat until no edge changes,
-    * bounded by `maxRounds` as a guard. Unlike synchronous label
-    * propagation (which can oscillate — [[labelPropagateConverged]]'s
-    * documented caveat), this loop PROVABLY terminates: each round's
-    * candidates contain the previous round's surviving edges, so every
-    * vertex's sorted top-k score vector is monotone non-decreasing and
-    * bounded — an unchanged round is a fixed point forever. At
-    * convergence depth d the result equals
-    * `knnGraphRefineIter(rounds = d)` exactly (spec-pinned). Carry
-    * id-frames are localCheckpoint'd per round (the edge frame enters
-    * the two-hop self-join TWICE, the lineage-doubling shape), the
-    * previous round's released.
-    *
-    * @return (the refined edge table, rounds run — the unchanged
-    *         round counts)
-    */
-  def knnGraphRefineConverged(
-      embeddings: DataFrame,
-      k: Int = 4,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      maxRounds: Int = 20): (DataFrame, Int) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    var g = knnGraph(embeddings, k, nCentroids, nProbe)
-      .select(col("probe_id"), col("vec_id"))
-      .localCheckpoint(true)
-    var prev: DataFrame = null
-    var lastScored: DataFrame = null
-    var r = 0
-    var changed = 1L
-    while (changed > 0 && r < maxRounds) {
-      r += 1
-      lastScored = refineRound(embeddings, g, k)
-      val next = lastScored.select("probe_id", "vec_id").localCheckpoint(true)
-      // edge-set delta: new edges not in the previous round (monotone
-      // top-k ⇒ a zero delta is symmetric and a fixed point forever)
-      changed = next.join(g, Seq("probe_id", "vec_id"), "left_anti").count()
-      if (prev != null)
-        org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(prev)
-      prev = g
-      g = next
-    }
-    // the final round's `next` checkpoint has no consumer — lastScored
-    // recomputes from `prev`, the round's INPUT frame (r14 advice: the
-    // dangling n·k-row checkpoint stayed materialized until GC). Keep
-    // `prev`; release `g`, mirroring the in-loop discipline.
-    org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(g)
-    (lastScored.orderBy(col("probe_id"), col("cosine").desc, col("vec_id")), r)
-  }
-
-  /** [[labelPropagateIter]] run to CONVERGENCE instead of fixed depth
-    * (Zhu & Ghahramani's actual stopping rule): rounds repeat over the
-    * frozen graph until no vertex's carried label changes, bounded by
-    * `maxRounds` — the [[graft.ext.DedupClusters]] changed-count idiom
-    * applied to propagation. The declared fixed-depth KEY stays the
-    * oracle-checkable face (an unrolled-CTE oracle cannot express an
-    * unbounded loop); this is its operational sibling for the pipeline
-    * run, and by construction its result at convergence depth d equals
-    * `labelPropagateIter(…, rounds = d)` exactly (spec-pinned, along
-    * with early stopping). Per round: the iter key's one labels-sized
-    * equi-join + two vertex aggregates, PLUS one changed-count
-    * aggregate (an anti-equality join on the carried frame) — all
-    * vertex-keyed, no corpus window; each carry frame is
-    * localCheckpoint'd (NOT just persisted — the carry re-enters each
-    * round's plan twice, so an un-truncated lineage doubles per round)
-    * and the previous round's checkpoint is released, so every round's
-    * plan stays one join deep at any depth.
-    *
-    * @return (the [[labelPropagateIter]]-shaped result, rounds run —
-    *         the round whose votes produced no label change counts)
-    */
-  def labelPropagateConverged(
-      embeddings: DataFrame,
-      k: Int = 4,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      maxRounds: Int = 20): (DataFrame, Int) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val edges = graft.core.CacheScope.persist(
-      knnGraph(embeddings, k, nCentroids, nProbe)
-        .select(col("probe_id"), col("vec_id").as("nbr_id"),
-          col("cosine").cast("decimal(16,6)").as("w")))
-    var cur = embeddings.select(col("vec_id"), col("label").as("cur_label"))
-      .localCheckpoint(true)
-    var prev: DataFrame = null
-    var lastWinner: DataFrame = null
-    var r = 0
-    var changed = 1L
-    while (changed > 0 && r < maxRounds) {
-      r += 1
-      // NO pin on intermediate winners (r14 review: up to maxRounds
-      // dead cached frames otherwise): each round's winner is fully
-      // consumed by `next`'s EAGER checkpoint; only the final round's
-      // is read again (by the output), one recompute from the pinned
-      // edges + the still-checkpointed final carry input
-      val winner = voteRound(edges, cur)
-      lastWinner = winner
-      // localCheckpoint, not persist: `cur` re-enters the plan TWICE
-      // per round (votes + carry), so an un-truncated lineage DOUBLES
-      // per round — at convergence depth 20 that is a million-node
-      // plan (the DedupClusters CC-loop idiom; persist pins data but
-      // keeps the logical plan)
-      val next = carryForward(cur, winner).localCheckpoint(true)
-      changed = next.as("n")
-        .join(cur.as("p"), col("n.vec_id") === col("p.vec_id"))
-        .filter(col("n.cur_label") =!= col("p.cur_label"))
-        .count()
-      if (prev != null)
-        org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(prev)
-      prev = cur
-      cur = next
-    }
-    // the last two frames stay checkpointed: the final round's input
-    // underpins lastWinner's recompute path (the CC loop's discipline).
-    // The FINAL winner is pinned here — only known to be final now —
-    // so a caller running several actions on the result pays the last
-    // vote round once, not once per action (r14 review)
-    (propagationOutput(embeddings, graft.core.CacheScope.persist(lastWinner)), r)
-  }
-
   /** INCREMENTAL kNN-graph maintenance (r14 verdict #2a) — the
     * [[appendToClustered]] posture applied to the EDGE TABLE: fold an
     * arriving vector batch into a persisted [[knnGraph]] without the
@@ -1462,9 +1272,9 @@ object Similarity {
     *  2. The [[appendToGraph]] kernel computes the newcomers' edges
     *     and the affected vertices' exact re-rank.
     *  3. ONLY the partitions holding affected or newcomer vertices
-    *     rewrite (scratch dir + dynamic partition overwrite, the
-    *     [[compactClustered]] recipe); untouched partitions' files are
-    *     never listed, read, or rewritten — byte-identical by
+    *     rewrite (eager localCheckpoint + dynamic partition overwrite,
+    *     the [[compactClustered]] recipe); untouched partitions' files
+    *     are never listed, read, or rewritten — byte-identical by
     *     construction (spec-pinned). Write amplification is bounded by
     *     the CELLS the batch lands in or probes into, never the graph.
     *
@@ -1526,9 +1336,10 @@ object Similarity {
 
   /** The fold TAIL shared by [[appendToGraphClustered]] (exact append)
     * and [[refreshGraphClustered]] (deferred-debt settlement): place
-    * each rewritten vertex, compute the rewrite set, write the touched
-    * partitions through scratch + dynamic overwrite. One body, so the
-    * two faces can never drift on placement or rewrite semantics.
+    * each rewritten vertex, compute the rewrite set, stage the touched
+    * partitions in an eager localCheckpoint and write them by dynamic
+    * overwrite. One body, so the two faces can never drift on
+    * placement or rewrite semantics.
     */
   private def foldIntoLayout(
       spark: SparkSession,
@@ -1783,7 +1594,7 @@ object Similarity {
     * the walk serves from the same persisted edge artifact
     * [[appendToGraph]] maintains. Each round's beam is EAGERLY
     * localCheckpoint'd and the previous round's released as soon as
-    * the next has materialized (the [[knnGraphRefineConverged]]
+    * the next has materialized (the [[DedupClusters]] CC-loop
     * discipline — r15 advice: the per-round CacheScope pins
     * accumulated rounds+1 frames per serving CALL, leaking across
     * repeated calls until some caller's releaseAll). Only the FINAL
@@ -2360,9 +2171,8 @@ object Similarity {
   /** [[knnJoin]] upgraded to the PRODUCTION retrieval stack — the
     * [[ivfPqTopK]] composition (IVF cell restriction → PQ ADC
     * shortlist → exact re-rank) with probes as DATA: per-probe
-    * equality with `ivfPqTopK` is bit-exact (spec-asserted), so the
-    * declared capstone key and the streaming serving face
-    * (`StreamSimilarity.topKBatchPq`) share ONE kernel.
+    * equality with `ivfPqTopK` is bit-exact (spec-asserted), so a
+    * probe batch and the declared capstone key share ONE kernel.
     *
     * Plan, beyond [[knnJoinAssigned]]'s cell stage:
     *   - candidate (probe, vector) pairs carry IDS ONLY — no float
@@ -2762,8 +2572,9 @@ object Similarity {
     *  4. [[compactClustered]] bounds the small-file accumulation the
     *     append model creates (the Loader.compact posture): touched
     *     partitions exceeding `maxFilesPerPartition` are rewritten
-    *     in place via a scratch dir + dynamic partition overwrite —
-    *     still bounded by the touched partitions, never the index.
+    *     in place via an eager localCheckpoint + dynamic partition
+    *     overwrite — still bounded by the touched partitions, never
+    *     the index.
     *
     * Serving equivalence (spec-pinned): the same vector set serves
     * identically from an appended layout and a from-scratch rebuild
@@ -3570,15 +3381,6 @@ object Similarity {
           SuperProbeDefault, carry = Seq.empty)
           .select(col("centroid_id"), col("vec_id"), col("embedding"))),
       minCos)
-
-  /** [[semanticDedupHier]] over the join-assignment path. */
-  def semanticDedupHierJoin(
-      embeddings: DataFrame,
-      index: IvfIndex,
-      minCos: Double = SemDedupMinCos,
-      superK: Int = 0): DataFrame =
-    semanticDedupFrom(embeddings,
-      semanticPairsHierJoin(embeddings, index, minCos, superK))
 
   /** Within-cell pair kernel shared by the flat and hierarchical
     * assignment paths: co-located self-join on `centroid_id`, 6-dp

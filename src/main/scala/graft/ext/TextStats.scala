@@ -107,16 +107,24 @@ object TextStats {
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("lang_declared", "lang_pred")
 
+  /** The four quality signals over `text` — (length, whitespace tokens,
+    * punctuation count, stop-marker hits), as doubles with length and
+    * tokens floored at 1 — shared by [[qualityScoreColumn]] and the ratio
+    * columns of [[qualityScore]].
+    */
+  private def qualitySignals(text: Column): (Column, Column, Column, Column) = (
+    greatest(length(text).cast("double"), lit(1.0)),
+    greatest(wsTokenCount(text).cast("double"), lit(1.0)),
+    punctCount(text).cast("double"),
+    markerHits(concat(lit(" "), lower(text), lit(" ")),
+      LangMarkers.flatMap(_._2).distinct).cast("double"))
+
   /** The [0,1] quality score as a single Column over `text` — shared by
     * the batch projection below and the streaming curation face
     * ([[graft.streaming.StreamCurate]]), so the two can never drift.
     */
   def qualityScoreColumn(text: Column): Column = {
-    val len = greatest(length(text).cast("double"), lit(1.0))
-    val toks = greatest(wsTokenCount(text).cast("double"), lit(1.0))
-    val punct = punctCount(text).cast("double")
-    val stops = markerHits(concat(lit(" "), lower(text), lit(" ")),
-      LangMarkers.flatMap(_._2).distinct).cast("double")
+    val (len, toks, punct, stops) = qualitySignals(text)
     // heuristic score: reward stopword presence + sane word length,
     // penalize punctuation soup and extreme lengths
     round(
@@ -131,11 +139,7 @@ object TextStats {
     * rounded at the end (oracle-exact).
     */
   def qualityScore(documents: DataFrame): DataFrame = {
-    val len = greatest(length(col("text")).cast("double"), lit(1.0))
-    val toks = greatest(wsTokenCount(col("text")).cast("double"), lit(1.0))
-    val punct = punctCount(col("text")).cast("double")
-    val stops = markerHits(concat(lit(" "), lower(col("text")), lit(" ")),
-      LangMarkers.flatMap(_._2).distinct).cast("double")
+    val (len, toks, punct, stops) = qualitySignals(col("text"))
     documents.select(
       col("doc_id"),
       round(punct / len, 4).as("punct_ratio"),

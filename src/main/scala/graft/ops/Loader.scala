@@ -26,26 +26,13 @@ import org.apache.spark.sql.functions.{broadcast, col, concat, concat_ws, count,
 object Loader {
 
   /** BQ MERGE errors when a target row matches multiple staging rows; our
-    * join-based rewrite would silently keep both (SURVEY.md §7.4.3), so we
-    * enforce staging-key uniqueness — eagerly here (a separate blocking
-    * job; kept for callers who want the check up front), or lazily inside
-    * the merge plan itself via [[withUniqueKeyGuard]] (the default in
-    * [[upsert]]: no extra pass over staging, no driver serialization at
-    * plan-construction time).
-    */
-  def requireUniqueKeys(staging: DataFrame, keys: Seq[String]): Unit = {
-    val dups = staging.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).count()
-    if (dups > 0)
-      throw new IllegalArgumentException(
-        s"staging has duplicate merge keys ${keys.mkString(",")}: MERGE would match multiple rows")
-  }
-
-  /** In-plan staging-key uniqueness guard: a window count over the merge
-    * keys plus `assert_true`, evaluated when the merge job itself runs —
-    * duplicate keys fail the ACTION with a descriptive error instead of
-    * costing an extra eager pass at plan-construction time. The guard
-    * lives in a filter so column pruning cannot drop it.
+    * join-based rewrite would silently keep both (SURVEY.md §7.4.3), so
+    * [[upsert]] enforces staging-key uniqueness with this in-plan guard:
+    * a window count over the merge keys plus `assert_true`, evaluated
+    * when the merge job itself runs — duplicate keys fail the ACTION
+    * with a descriptive error instead of costing an extra eager pass
+    * over staging at plan-construction time. The guard lives in a
+    * filter so column pruning cannot drop it.
     */
   def withUniqueKeyGuard(staging: DataFrame, keys: Seq[String]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ext.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Streaming face 15 — continuous kNN-GRAPH maintenance: an arriving
   * vector stream folds into the graph artifact pair — the
@@ -153,38 +153,4 @@ object StreamGraphMaintain {
           ()
         }
       }
-
-  /** Convenience: one AvailableNow layered maintenance pass. */
-  def maintainHnswOnce(
-      spark: SparkSession,
-      vectors: DataFrame,
-      index: Similarity.IvfIndex,
-      vecPath: String,
-      hnswPath: String,
-      checkpointDir: String,
-      k: Int = 4,
-      nProbe: Int = 4): StreamingQuery = {
-    val q = maintainHnsw(vectors, index, vecPath, hnswPath, k, nProbe)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.awaitTermination()
-    q
-  }
-
-  /** Convenience: run one AvailableNow maintenance pass to completion. */
-  def maintainOnce(
-      spark: SparkSession,
-      vectors: DataFrame,
-      index: Similarity.IvfIndex,
-      vecPath: String,
-      graphPath: String,
-      checkpointDir: String,
-      k: Int = 4,
-      nProbe: Int = 4): StreamingQuery = {
-    val q = maintain(vectors, index, vecPath, graphPath, k, nProbe)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.awaitTermination()
-    q
-  }
 }

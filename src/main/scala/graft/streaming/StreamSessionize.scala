@@ -101,17 +101,4 @@ object StreamSessionize {
       .withWatermark("event_time", watermark)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
       .drop("event_time")
-
-  /** File-source stream over an events directory — the production entry:
-    * `readStream` with the batch schema, bounded per-trigger file intake.
-    */
-  def readEventStream(spark: SparkSession, dir: String): Dataset[Event] = {
-    import spark.implicits._
-    spark.readStream
-      .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", "16")
-      .parquet(dir)
-      .as[Event]
-  }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import graft.ext.Similarity
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming similarity search: online top-k retrieval of a PROBE
@@ -50,42 +48,6 @@ object StreamSimilarity {
     // (`similarity_knn_join_embeddings`): the plan-shape notes and the
     // bounded cell-id collect live on [[Similarity.knnJoinAssigned]]
     Similarity.knnJoinAssigned(probes, assigned, centroids, k, nProbe)
-
-  /** The PRODUCTION retrieval stack per micro-batch — IVF cell
-    * restriction → PQ ADC shortlist → exact re-rank
-    * ([[Similarity.knnJoinPq]], the `similarity_ivfpq` composition
-    * with probes as data): per-probe results equal
-    * `Similarity.ivfPqTopK` bit-for-bit (spec-asserted), so the
-    * serving face and the declared capstone key share one kernel.
-    * Floats are touched only for each probe's `shortlist` re-rank
-    * rows — the micro-batch cost a billion-scale corpus needs.
-    */
-  def topKBatchPq(
-      probes: DataFrame,
-      embeddings: DataFrame,
-      k: Int = 10,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      shortlist: Int = Similarity.IvfPqShortlist): DataFrame =
-    Similarity.knnJoinPq(embeddings, probes, k, nCentroids, nProbe, shortlist)
-
-  /** [[topKSink]]'s production twin: every micro-batch is answered
-    * with [[topKBatchPq]] (IVF-PQ with re-ranking) and handed to
-    * `sink`.
-    */
-  def topKPqSink(
-      probeStream: DataFrame,
-      embeddings: DataFrame,
-      k: Int = 10,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      shortlist: Int = Similarity.IvfPqShortlist)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    probeStream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      if (!batch.isEmpty)
-        sink(topKBatchPq(batch, embeddings, k, nCentroids, nProbe, shortlist), id)
-      ()
-    }
 
   /** Attach the retrieval sink to a probe stream: every micro-batch is
     * answered with [[topKBatch]] against the static corpus and handed

@@ -166,136 +166,6 @@ class PruningSpec extends SparkSpec {
     }
   }
 
-  test("ANN sketch layout: the hamming neighborhood prunes FILES") {
-    import graft.ext.Similarity
-    val e = graft.io.Sources.table(spark, sfDir, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ann_prune")
-    try {
-      Similarity.writeSketchBuckets(e, dir.toString)
-      val probe = Similarity.defaultProbe(e)
-      val ids = Similarity.probeSketchIds(spark, probe)
-      val q = Similarity.annTopKBucketed(spark.read.parquet(dir.toString), ids, probe)
-      val scan = flatten(q.queryExecution.executedPlan)
-        .collectFirst { case f: FileSourceScanExec => f }
-        .getOrElse(fail("no parquet scan in the bucketed ANN plan"))
-      assert(scan.partitionFilters.nonEmpty,
-        "sketch neighborhood did not become PartitionFilters")
-      val selected = scan.relation.location
-        .listFiles(scan.partitionFilters, scan.dataFilters)
-      val all = scan.relation.location.listFiles(Nil, Nil)
-      // the h≤3 neighborhood intersected with the buckets that exist
-      // must be a strict minority of the layout's partitions
-      assert(all.size >= 20, s"degenerate layout: ${all.size} buckets")
-      assert(selected.size * 2 < all.size,
-        s"file pruning ineffective: ${selected.size} of ${all.size} buckets read")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
-  }
-
-  /** Measure the bucketed-ANN probe on a synthetic corpus: populated
-    * bucket count, per-radius listing selectivity, recall@10 vs brute
-    * force. All seeded → deterministic → pinnable.
-    */
-  private def annAtScale(
-      rows: Seq[(Long, String, Seq[Float])],
-      hs: Range): Seq[(Int, Int, Int, Int, Double)] = {
-    import graft.ext.Similarity
-    import spark.implicits._
-    val e = rows.toDF("vec_id", "label", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ann_scale")
-    try {
-      Similarity.writeSketchBuckets(e, dir.toString)
-      val probe = rows.head._3
-      val brute = Similarity.topK(e, probe).select("vec_id")
-        .collect().map(_.getLong(0)).toSet
-      hs.map { h =>
-        val hIds = Similarity.probeSketchIds(spark, probe, maxHamming = h)
-        val q = Similarity.annTopKBucketed(spark.read.parquet(dir.toString), hIds, probe)
-        val scan = flatten(q.queryExecution.executedPlan)
-          .collectFirst { case f: FileSourceScanExec => f }
-          .getOrElse(fail("no parquet scan in the bucketed ANN plan"))
-        assert(scan.partitionFilters.nonEmpty)
-        val all = scan.relation.location.listFiles(Nil, Nil)
-        val selected = scan.relation.location
-          .listFiles(scan.partitionFilters, scan.dataFilters)
-        assert(selected.size <= hIds.size,
-          s"listing exceeded the h<=$h neighborhood: ${selected.size} > ${hIds.size}")
-        val ann = q.select("vec_id").collect().map(_.getLong(0)).toSet
-        val recall = (ann intersect brute).size / 10.0
-        info(s"h<=$h: ids=${hIds.size} selected=${selected.size}/${all.size} recall@10=$recall")
-        (h, hIds.size, selected.size, all.size, recall)
-      }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
-  }
-
-  test("ANN sketch layout at >=4k populated buckets (clustered corpus): h<=3 probe is listing-cheap AND accurate") {
-    // The realistic regime: embedding corpora are CLUSTERED (that is
-    // why vector search works at all). 6000 vectors around 600 seeded
-    // centers — member sketches differ from their center's by noise-
-    // flipped bits, so the layout still populates >=4k of the 2^16
-    // buckets, while a probe's true neighbors stay within a small
-    // hamming radius. The three scale claims, pinned with numbers:
-    //  1. the h<=3 probe enumerates exactly 697 ids regardless of how
-    //     many buckets exist — listing is neighborhood-bounded;
-    //  2. selected partitions = |neighborhood ∩ populated| — a small
-    //     minority of the layout, never proportional to it;
-    //  3. recall@10 vs brute force is a pinned, geometry-dependent
-    //     number: 0.9 at sibling-cosine ≈0.92 (σ=0.3, 4.1k buckets),
-    //     0.8 at ≈0.86 (σ=0.4, declared here), collapsing on isotropic
-    //     data (next test) — the full curve lives in SCALE.md §ANN.
-    val rnd = new scala.util.Random(0xC1)
-    val centers = Array.fill(600)(Array.fill(64)(rnd.nextGaussian()))
-    val rows = (0 until 6000).map { i =>
-      val c = centers(i % 600)
-      (i.toLong, s"l${i % 7}",
-        c.map(v => (v + 0.4 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val curve = annAtScale(rows, 3 to 3)
-    val (_, idsN, sel, all, recall) = curve.head
-    assert(idsN == 697, s"h<=3 neighborhood of 16 planes must be 697, got $idsN")
-    assert(all >= 4096, s"expected >=4k populated buckets, got $all")
-    assert(sel * 8 <= all, s"probe reads $sel of $all buckets — not a minority")
-    assert(recall >= 0.8,
-      s"clustered-corpus recall@10 $recall below the measured 0.8 floor " +
-        s"(selected $sel/$all buckets)")
-  }
-
-  test("ANN sketch layout, isotropic corpus: the adversarial recall curve is pinned") {
-    // The worst case: iid gaussian vectors have NO cluster structure —
-    // a query's true top-10 are barely closer than random points, and
-    // hyperplane-LSH recall collapses (measured: 0.1/0.2/0.4 at
-    // h<=3/4/5 over ~5.5k populated buckets, scanning 1%/3.5%/10% of
-    // them). Pinned HERE so the number is a recorded property of the
-    // operating point, not a surprise at 100 TB; SCALE.md documents the
-    // remedies (geometry-adaptive IVF, more planes + banding).
-    val rnd = new scala.util.Random(0xA5EED)
-    val rows = (0 until 6000).map { i =>
-      (i.toLong, s"l${i % 7}", Array.fill(64)(rnd.nextGaussian().toFloat).toSeq)
-    }
-    val curve = annAtScale(rows, 3 to 5)
-    curve.foreach { case (h, _, sel, all, _) =>
-      assert(all >= 4096, s"expected >=4k populated buckets, got $all")
-      assert(sel * 8 <= all, s"h<=$h probe reads $sel of $all buckets — not a minority")
-    }
-    assert(curve.map(_._5) == curve.map(_._5).sorted,
-      s"recall must be monotone in the probe radius: $curve")
-    // seeded → exact floors at the measured operating points
-    val byH = curve.map(c => c._1 -> c._5).toMap
-    assert(byH(3) >= 0.1 && byH(4) >= 0.2 && byH(5) >= 0.4,
-      s"isotropic recall curve regressed below the measured floor: $byH")
-  }
-
   test("token_count: documents scan reads only doc_id and text") {
     val s = scans(SparkEntry.queries("token_count_documents")(spark, sfDir))
     graft.core.CacheScope.releaseAll()

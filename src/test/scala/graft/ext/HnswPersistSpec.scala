@@ -248,4 +248,50 @@ class HnswPersistSpec extends SparkSpec {
       "re-delivered batch must leave both artifacts file-identical")
     graft.core.CacheScope.releaseAll()
   }
+
+  test("maintainHnsw: streamed micro-batches through the layered sink equal the per-layer rebuild (face 15, layered)") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.{GmVec, StreamGraphMaintain}
+    val (cents, base, batch) = layerSplit(2, 4)
+    val ids = batch.select("vec_id").collect().map(_.getLong(0)).sorted
+    val mid = ids(ids.length / 2)
+    val (b1, b2) = (batch.filter(col("vec_id") < mid),
+      batch.filter(col("vec_id") >= mid))
+    assert(b1.count() > 0 && b2.count() > 0)
+    val root = java.nio.file.Files.createTempDirectory("graft-hnsws")
+    val vPath = root.resolve("vectors").toString
+    val hPath = root.resolve("hnsw").toString
+    Similarity.writeClustered(
+      Similarity.ivfAssignPortableTo(base, cents), vPath)
+    Similarity.writeHnswClustered(spark, base, hPath, levels = 2, ratio = 4,
+      k = 4)
+    def vecsOf(df: org.apache.spark.sql.DataFrame) = df
+      .select("vec_id", "embedding", "label").collect()
+      .map(r => GmVec(r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[GmVec]
+    // continuous micro-batch trigger: the AvailableNow default would
+    // terminate before the post-start addData batches arrive
+    val q = StreamGraphMaintain.maintainHnsw(input.toDF(),
+        Similarity.IvfIndex(cents), vPath, hPath, k = 4,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      .option("checkpointLocation", root.resolve("ckpt").toString)
+      .start()
+    try {
+      input.addData(vecsOf(b1).toSeq: _*)
+      q.processAllAvailable()
+      input.addData(vecsOf(b2).toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val idx = Similarity.readHnswClustered(spark, hPath)
+    val rebuilt = Similarity.hnswLayerGraphs(embs, levels = 2, ratio = 4,
+      k = 4)
+    for (l <- 0 to 2)
+      assert(rowsOf(idx.layers(l)) == rowsOf(rebuilt(l)),
+        s"streamed layer $l diverged from the rebuild over the union")
+    assert(spark.read.parquet(vPath).count() == embs.count(),
+      "vector layout must hold every streamed vector exactly once")
+    graft.core.CacheScope.releaseAll()
+  }
 }

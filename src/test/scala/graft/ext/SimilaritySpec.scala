@@ -248,10 +248,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("knnJoinPq: each probe's block equals ivfPqTopK bit-for-bit") {
-    // the streaming serving face (topKBatchPq delegates here) must
-    // reproduce the declared IVF-PQ capstone per probe EXACTLY — same
-    // cells, same ADC parts (6-dp index-ascending), same shortlist,
-    // same re-rank
+    // a probe batch must reproduce the declared IVF-PQ capstone per
+    // probe EXACTLY — same cells, same ADC parts (6-dp
+    // index-ascending), same shortlist, same re-rank
     val probes = embs.filter("vec_id % 97 = 0")
       .selectExpr("vec_id AS probe_id", "embedding")
     val joined = Similarity.knnJoinPq(embs, probes, k = 5).collect()
@@ -509,29 +508,6 @@ class SimilaritySpec extends SparkSpec {
         .ivfTopKClustered(spark.read.parquet(dir.toString), ids, probe)
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
       assert(got == want, s"clustered layout diverged:\n$got\nvs\n$want")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
-  }
-
-  test("annTopKBucketed over the sketch-partitioned layout matches annTopK") {
-    val probe = Similarity.defaultProbe(embs)
-    val want = Similarity.annTopK(embs, probe, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("ann_buckets")
-    try {
-      Similarity.writeSketchBuckets(embs, dir.toString)
-      val ids = Similarity.probeSketchIds(spark, probe)
-      // Σ C(16,i), i ≤ 3 — the full hamming-3 neighborhood
-      assert(ids.length == 1 + 16 + 120 + 560)
-      val got = Similarity
-        .annTopKBucketed(spark.read.parquet(dir.toString), ids, probe)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      assert(got == want, s"bucketed ANN diverged:\n$got\nvs\n$want")
     } finally {
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(dir)
@@ -1184,55 +1160,6 @@ class SimilaritySpec extends SparkSpec {
       .map(r => r.getLong(0) ->
         (r.getInt(2), BigDecimal(r.getDouble(3)).setScale(6), r.getLong(4))).toMap
     assert(got2 == r2, "round-2 votes diverged from the hand-rolled reference")
-  }
-
-  test("knnGraphRefineConverged: stops when edges stop changing; equals the fixed-depth kernel at that depth (r14)") {
-    def rws(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val (conv, d) = Similarity.knnGraphRefineConverged(embs, k = 4, maxRounds = 20)
-    val convRows = rws(conv)
-    info(s"NN-Descent converged after $d rounds")
-    // monotone bounded top-k scores ⇒ guaranteed termination (unlike
-    // synchronous label propagation): the bound must never bind here
-    assert(d >= 1 && d < 20, s"refinement must converge, took $d")
-    assert(convRows == rws(Similarity.knnGraphRefineIter(embs, k = 4, rounds = d)),
-      s"converged result diverged from knnGraphRefineIter(rounds=$d)")
-    assert(convRows == rws(Similarity.knnGraphRefineIter(embs, k = 4, rounds = d + 1)),
-      "convergence claimed but one more round still moves the graph")
-  }
-
-  test("labelPropagateConverged: stops when labels stop moving; equals the fixed-depth key at that depth (r14)") {
-    import spark.implicits._
-    // clustered fixture with a few WRONG labels — the semi-supervised
-    // shape propagation exists for (the near-isotropic parquet fixture
-    // oscillates under synchronous majority vote, the documented
-    // failure mode the maxRounds bound is for)
-    val rnd = new scala.util.Random(7)
-    val dim = 16; val nClust = 8; val perC = 25
-    val centers = Array.fill(nClust, dim)(rnd.nextGaussian().toFloat)
-    val fix = (0 until nClust).flatMap { c =>
-      (0 until perC).map { i =>
-        val label = if (i == 3) (c + 1) % nClust else c // mislabeled vertex
-        ((i * nClust + c).toLong,
-          centers(c).map(x => x + 0.05f * rnd.nextGaussian().toFloat).toSeq, label)
-      }
-    }.toDF("vec_id", "embedding", "label")
-    def rws(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val (conv, d) = Similarity.labelPropagateConverged(fix, k = 4, maxRounds = 20)
-    val convRows = rws(conv)
-    info(s"converged after $d rounds")
-    assert(d >= 1 && d < 20, s"fixture should converge early, took $d")
-    // the converged result IS the declared fixed-depth kernel at depth d
-    assert(convRows == rws(Similarity.labelPropagateIter(fix, k = 4, rounds = d)),
-      s"converged result diverged from labelPropagateIter(rounds=$d)")
-    // and it is a fixed point: one more round changes nothing
-    assert(convRows == rws(Similarity.labelPropagateIter(fix, k = 4, rounds = d + 1)),
-      "convergence claimed but one more round still moves the result")
-    // the propagation did its job: every mislabeled vertex was corrected
-    val pred = conv.collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    for (c <- 0 until nClust) {
-      val id = (3 * nClust + c).toLong
-      assert(pred(id) == c, s"mislabeled vertex $id not corrected: ${pred(id)}")
-    }
   }
 
   test("appendToGraph: bit-identical to the rebuild over the union; untouched vertices' rows verbatim (r15)") {
