@@ -912,21 +912,17 @@ object Corpus {
       outDir: String): DataFrame = {
     val spark = documents.sparkSession
     // pinned STATIC overwrite for the shard root: under a session-wide
-    // dynamic mode (which Loader's MERGE paths legitimately set), a
-    // re-run producing FEWER packs would leave the vanished packs'
-    // directories on disk — and the read-back manifest would then
-    // attest stale data as valid. The terminal's contract is "the
-    // shard root IS the packed corpus", which is exactly static
-    // overwrite. (Loader-style save/set/restore.)
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(confKey)
-    spark.conf.set(confKey, "static")
-    try
-      documents.select("doc_id", "text", "lang")
-        .join(packed.select("doc_id", "n_tokens", "pack_id"), Seq("doc_id"))
-        .write.mode("overwrite").partitionBy("pack_id")
-        .parquet(s"$outDir/shards")
-    finally spark.conf.set(confKey, prev)
+    // dynamic mode, a re-run producing FEWER packs would leave the
+    // vanished packs' directories on disk — and the read-back manifest
+    // would then attest stale data as valid. The terminal's contract is
+    // "the shard root IS the packed corpus", which is exactly static
+    // overwrite. A writer option, not the session conf: flipping the
+    // shared session's mode would race any concurrent writer on it.
+    documents.select("doc_id", "text", "lang")
+      .join(packed.select("doc_id", "n_tokens", "pack_id"), Seq("doc_id"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("pack_id")
+      .parquet(s"$outDir/shards")
     spark.read.parquet(s"$outDir/shards")
       .groupBy("pack_id")
       .agg(

@@ -136,9 +136,8 @@ object Loader {
 
   /** Materialize preserving a reference layout (provider, partition
     * columns, bucket spec — as captured by `GraftBridge.tableInfo`):
-    * rewrite paths (the dispatcher's swap-rename, the streaming sink's
-    * snapshot fallback) must not silently flatten a bucketed or
-    * partitioned target into a plain managed table.
+    * the swap rewrite ([[swapRewrite]]) must not silently flatten a
+    * bucketed or partitioned target into a plain managed table.
     */
   def writeTableLike(
       df: DataFrame,
@@ -172,12 +171,11 @@ object Loader {
   case object Create extends LoadMode // 'Create' → WRITE_TRUNCATE full replace
   case object Update extends LoadMode // 'Update' → staging + MERGE
 
-  /** Above this many touched partitions an Update falls back to the full
-    * swap rewrite (same bound, same rationale as the streaming sink's
-    * [[graft.streaming.StreamLoader.MaxTouchedPartitions]]): the
-    * per-partition OR predicate grows on the driver, and a staging batch
-    * touching thousands of partitions is rewriting most of the table
-    * regardless.
+  /** Above this many touched partitions [[mergeInto]] (and so the
+    * streaming sink, [[graft.streaming.StreamLoader.mergeBatch]]) falls
+    * back to the full swap rewrite: the per-partition OR predicate grows
+    * on the driver, and a staging batch touching thousands of partitions
+    * is rewriting most of the table regardless.
     */
   val MaxTouchedPartitions = 256
 
@@ -251,10 +249,15 @@ object Loader {
     * refusal naming the other — r13 advice); the hash suffix makes the
     * table→lease mapping injective while keeping the stem readable.
     */
-  def leaseFileName(table: String): String = {
+  def leaseFileName(table: String): String = s"${tableFileStem(table)}.lease"
+
+  /** `table` as an injective file-name stem: sanitized name + FNV-1a
+    * hash of the raw name (see [[leaseFileName]]).
+    */
+  private def tableFileStem(table: String): String = {
     var h = 0xcbf29ce484222325L // FNV-1a 64-bit offset basis
     table.foreach { ch => h ^= ch.toLong; h *= 0x100000001b3L }
-    f"${table.replaceAll("[^a-zA-Z0-9_.-]", "_")}.${h}%016x.lease"
+    f"${table.replaceAll("[^a-zA-Z0-9_.-]", "_")}.${h}%016x"
   }
 
   /** Where the lease for `table` lives, in the warehouse's OWN
@@ -1091,13 +1094,14 @@ object Loader {
     content
   }
 
-  /** Crash recovery for the swap rewrite: the drop-then-rename at the
-    * end of an unpartitioned Update has a window where the target name
-    * is absent but the fully-written swap table exists (saveAsTable
-    * registers the swap in the catalog only after its data is
-    * committed, so a catalog-visible swap IS complete). A restart that
-    * finds that state renames the swap into place before merging —
-    * the batch analogue of [[graft.streaming.StreamLoader.recoverIfMissing]].
+  /** Crash recovery for [[swapRewrite]]: its drop-then-rename has a
+    * window where the target name is absent but the fully-written swap
+    * table exists (saveAsTable registers the swap in the catalog only
+    * after its data is committed, so a catalog-visible swap IS
+    * complete, with the target's layout). A restart that finds that
+    * state renames the swap into place before merging: the dispatcher's
+    * Update ([[load]]) and the streaming sink
+    * ([[graft.streaming.StreamLoader.mergeBatch]]) both call this first.
     */
   def recoverFromSwap(spark: org.apache.spark.sql.SparkSession, table: String): Boolean = {
     val swap = swapName(table)
@@ -1157,18 +1161,10 @@ object Loader {
     val target = spark.table(table)
     val info = org.apache.spark.sql.GraftBridge.tableInfo(spark, table)
     val pcols = info.partitionColumnNames
-    // unpartitioned (or partition-storm / moved-row) path: full rewrite
-    // via swap table (same provider/partitioning/bucketing — the rename
-    // must not flatten the target's layout), then drop + rename — fully
-    // distributed, no collect; recoverable by [[recoverFromSwap]]
-    def fullSwapRewrite(): Unit = {
-      val merged = upsert(target, staging, keys, broadcastStaging = broadcastStaging)
-      val swap = swapName(table)
-      writeTableLike(merged, swap, info)
-      assertStillOwned(spark, table) // last gate before the drop→rename window
-      dropTable(spark, table)
-      renameTable(spark, swap, table)
-    }
+    // unpartitioned (or partition-storm / moved-row) path: full rewrite,
+    // fully distributed, no collect
+    def fullSwapRewrite(): Unit = swapRewrite(spark, table,
+      upsert(target, staging, keys, broadcastStaging = broadcastStaging), info)
     // the touched-partition list is a collect over staging's DISTINCT
     // partition values, limit-bounded — tiny by construction
     val touched =
@@ -1189,46 +1185,80 @@ object Loader {
       // staging batch must not OOM the guard; Catalyst then plans a
       // shuffle semi-join, still key-columns-only on both sides)
       val partitionPinnedByKeys = pcols.forall(keys.contains)
-      val movedKeyOutside = !partitionPinnedByKeys && {
-        val outside = target.filter(!cond).select(keys.map(col): _*)
-        val stagingKeys = staging.select(keys.map(col): _*).distinct()
-        val probeSide =
-          if (shouldBroadcastStaging(outside, stagingKeys)) broadcast(stagingKeys)
-          else stagingKeys
-        !outside.join(probeSide, keys, "left_semi").isEmpty
-      }
-      if (movedKeyOutside) fullSwapRewrite()
-      else {
-        val slice = target.filter(cond)
-        val merged = upsert(slice, staging, keys, broadcastStaging = broadcastStaging)
-        // Spark refuses INSERT OVERWRITE on a table the plan also reads
-        // (UNSUPPORTED_OVERWRITE): land the merged slice — bounded by the
-        // touched partitions, not the table — as a scratch table first.
-        // applicationId-scoped so two apps merging the same target in a
-        // shared warehouse never clobber each other's slice.
-        val app = spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-        val tmp = s"${table}_merge_slice_swap_$app"
-        dropTable(spark, tmp) // reap any stale scratch from this app
-        writeTable(merged, tmp)
-        // dynamic mode via session conf: static mode would TRUNCATE the
-        // untouched partitions
-        val confKey = "spark.sql.sources.partitionOverwriteMode"
-        val prev = spark.conf.get(confKey)
-        // the ownership assert and the conf flip live INSIDE the try: a
-        // lost lease must not leak partitionOverwriteMode=dynamic into
-        // the session or strand the scratch table
-        try {
-          assertStillOwned(spark, table) // last gate before the overwrite
-          spark.conf.set(confKey, "dynamic")
-          spark.table(tmp)
-            .select(target.columns.map(col).toIndexedSeq: _*)
-            .write.mode("overwrite")
-            .insertInto(table)
-        } finally {
-          spark.conf.set(confKey, prev)
-          dropTable(spark, tmp)
+      val outsideSlice = target.filter(!cond)
+      // a complement that partition-prunes to no file (staging touches
+      // every partition) holds no row to probe: the driver-side listing
+      // settles it without the probe's jobs
+      val movedKeyOutside =
+        !partitionPinnedByKeys && outsideSlice.inputFiles.nonEmpty && {
+          val outside = outsideSlice.select(keys.map(col): _*)
+          val stagingKeys = staging.select(keys.map(col): _*).distinct()
+          val probeSide =
+            if (shouldBroadcastStaging(outside, stagingKeys)) broadcast(stagingKeys)
+            else stagingKeys
+          !outside.join(probeSide, keys, "left_semi").isEmpty
         }
-      }
+      if (movedKeyOutside) fullSwapRewrite()
+      else overwritePartitions(spark, table,
+        upsert(target.filter(cond), staging, keys, broadcastStaging = broadcastStaging))
+    }
+  }
+
+  /** Rewrite `table` as `df` through the swap table: write `df` with
+    * the target's layout `info` (provider, partitioning, bucketing),
+    * re-check the lease at the last gate, then drop the target and
+    * rename the swap into place. Inherently O(|table|); a crash between
+    * the drop and the rename is repaired by [[recoverFromSwap]].
+    */
+  private def swapRewrite(
+      spark: org.apache.spark.sql.SparkSession,
+      table: String,
+      df: DataFrame,
+      info: org.apache.spark.sql.GraftBridge.TableInfo): Unit = {
+    val swap = swapName(table)
+    writeTableLike(df, swap, info)
+    assertStillOwned(spark, table) // last gate before the drop→rename window
+    dropTable(spark, table)
+    renameTable(spark, swap, table)
+  }
+
+  /** Replace the partitions `slice` holds rows for, leaving every other
+    * partition's files untouched. Spark refuses INSERT OVERWRITE on a
+    * table the plan also reads (UNSUPPORTED_OVERWRITE), so the slice —
+    * bounded by the partitions it covers, not the table — is staged as
+    * parquet first, under `warehouse/_graft_staging/` in a directory per
+    * table and application (two applications rewriting one target in a
+    * shared warehouse never clobber each other's slice), and deleted
+    * once the overwrite returns or fails. Dynamic mode goes through the
+    * session conf: the writer-option spelling is not honored through
+    * insertInto on catalog tables, and static mode would TRUNCATE the
+    * untouched partitions. The ownership assert and the conf flip sit
+    * inside the try: a lost lease must not leak
+    * partitionOverwriteMode=dynamic into the session or strand the
+    * staged slice.
+    */
+  private def overwritePartitions(
+      spark: org.apache.spark.sql.SparkSession,
+      table: String,
+      slice: DataFrame): Unit = {
+    val app = spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
+    val tmp = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), "_graft_staging"),
+      s"${tableFileStem(table)}.$app")
+    val confKey = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(confKey)
+    try {
+      slice.write.mode("overwrite").parquet(tmp.toString)
+      assertStillOwned(spark, table) // last gate before the overwrite
+      spark.conf.set(confKey, "dynamic")
+      spark.read.parquet(tmp.toString)
+        .select(slice.columns.map(col).toIndexedSeq: _*)
+        .write.mode("overwrite")
+        .insertInto(table)
+    } finally {
+      spark.conf.set(confKey, prev)
+      tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
+      ()
     }
   }
 
@@ -1246,9 +1276,9 @@ object Loader {
     * small files (per-file open/footer costs dominate scans long before
     * data volume does). Rewrites ONLY partitions whose file count
     * exceeds `maxFilesPerPartition`, byte-identical data (same rows,
-    * fewer files), via the same scratch-table + dynamic-partition-
-    * overwrite path as the merge — untouched partitions' files are
-    * never read or replaced. The OPTIMIZE/rewrite_data_files analogue
+    * fewer files), via the same staged dynamic partition overwrite as
+    * the merge ([[overwritePartitions]]) — untouched partitions' files
+    * are never read or replaced. The OPTIMIZE/rewrite_data_files analogue
     * of the transactional table formats, minus the transaction log this
     * engine deliberately doesn't carry.
     *
@@ -1289,11 +1319,7 @@ object Loader {
         val totalBytes = files.map(f =>
           fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
         val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val swap = swapName(table)
-        writeTableLike(target.coalesce(nFiles), swap, info)
-        assertStillOwned(spark, table) // last gate before the drop→rename window
-        dropTable(spark, table)
-        renameTable(spark, swap, table)
+        swapRewrite(spark, table, target.coalesce(nFiles), info)
         1
       }
     } else {
@@ -1313,30 +1339,8 @@ object Loader {
             else col(c).cast("string") === lit(v)
           }.reduce(_ && _)
         }
-        val cond = preds.reduce(_ || _)
-        val slice = target.filter(cond)
-          .repartition(pcols.map(col).toIndexedSeq: _*)
-        // same read-vs-overwrite conflict as mergeInto: land the slice
-        // as an app-scoped scratch table, then dynamic-overwrite back
-        val app = spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-        val tmp = s"${table}_compact_swap_$app"
-        dropTable(spark, tmp)
-        writeTable(slice, tmp)
-        val confKey = "spark.sql.sources.partitionOverwriteMode"
-        val prev = spark.conf.get(confKey)
-        // assert + conf flip inside the try, same as mergeInto: a lost
-        // lease must not leak dynamic mode or strand the scratch table
-        try {
-          assertStillOwned(spark, table) // last gate before the overwrite
-          spark.conf.set(confKey, "dynamic")
-          spark.table(tmp)
-            .select(target.columns.map(col).toIndexedSeq: _*)
-            .write.mode("overwrite")
-            .insertInto(table)
-        } finally {
-          spark.conf.set(confKey, prev)
-          dropTable(spark, tmp)
-        }
+        overwritePartitions(spark, table,
+          target.filter(preds.reduce(_ || _)).repartition(pcols.map(col).toIndexedSeq: _*))
         overfull.size
       }
     }
@@ -1422,16 +1426,12 @@ object Loader {
           bit * zcols.size + idx)
       }.reduce[Column](_.bitwiseOR(_))
     }.reduce[Column](_.bitwiseOR(_))
-    val swap = swapName(table)
-    writeTableLike(
+    swapRewrite(spark, table,
       target.withColumn("_z", zExpr)
         .repartitionByRange(nFiles, col("_z"))
         .sortWithinPartitions("_z")
         .drop("_z"),
-      swap, info)
-    assertStillOwned(spark, table) // last gate before the drop→rename window
-    dropTable(spark, table)
-    renameTable(spark, swap, table)
+      info)
     spark.table(table).inputFiles.length
     }
     }

@@ -1,33 +1,27 @@
 package graft.streaming
 
 import graft.ops.Loader
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Streaming MERGE sink: continuous upsert of a changelog stream into a
-  * catalog table — the streaming face of [[graft.ops.Loader.upsert]]
+  * catalog table — the streaming face of [[graft.ops.Loader.mergeInto]]
   * (the reference's MERGE semantics, gcp_function.py:67-113, driven by
   * micro-batches instead of batch jobs; the standard CDC-ingest shape).
   *
   * Spark's stateless sinks can't express MERGE, so the canonical form
-  * is `foreachBatch`: each micro-batch is a staging frame, upserted with
-  * the same plan as the batch loader (anti-join + union, staging
-  * broadcast when small — which a micro-batch always is). Within a
-  * micro-batch, duplicate keys keep the LAST row by `seqCol` (changelog
-  * order), mirroring how a CDC consumer compacts before merging; the
-  * batch uniqueness guard then rides the merge job as usual.
-  *
-  * Write-back cost is BOUNDED BY THE BATCH, not the table, when the
-  * target is partitioned: the merge runs against only the partitions the
-  * batch touches (partition-pruned scan) and dynamic partition overwrite
-  * replaces only those partitions' files — a 1-row batch into a 100 TB
-  * date-partitioned target rewrites one day's partition, never the
-  * table. Unpartitioned targets fall back to a full snapshot rewrite
-  * (inherently O(|target|) without a transactional table format), made
-  * crash-recoverable: the snapshot lands in the checkpoint dir BEFORE
-  * the catalog table is replaced, and a restart that finds the table
-  * missing restores it from the last complete snapshot before merging.
+  * is `foreachBatch`: each micro-batch keeps the LAST row per key by
+  * `seqCol` (changelog order), mirroring how a CDC consumer compacts
+  * before merging, and is then MERGEd by the batch loader's
+  * [[graft.ops.Loader.mergeInto]] with staging broadcast (a micro-batch
+  * is always small). The sink has exactly that path's behaviour: the
+  * single-writer lease (and its loud refusal on an object-store
+  * warehouse with no lease store registered), the touched-partition
+  * rewrite of partitioned targets with its moved-row guard, and the
+  * swap rewrite of unpartitioned targets. Before every micro-batch
+  * [[graft.ops.Loader.recoverFromSwap]] repairs a crash in the swap's
+  * drop→rename window, so the checkpoint replay finds the target again
+  * and re-merges idempotently (the same compacted keys upserted twice).
   */
 object StreamLoader {
 
@@ -44,85 +38,11 @@ object StreamLoader {
       .filter(col("_sl_rn") === 1).drop("_sl_rn")
   }
 
-  private def snapshotDir(checkpointDir: String) = s"$checkpointDir/merge-tmp"
-
-  /** Above this many touched partitions a micro-batch falls back to the
-    * full snapshot rewrite: the per-partition OR predicate would grow
-    * unbounded on the driver, and a batch touching thousands of
-    * partitions is rewriting most of the table regardless.
-    */
-  val MaxTouchedPartitions = 256
-
-  private def snapshotComplete(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
-
-  /** The target's physical layout, persisted NEXT TO the snapshot: once
-    * the table is dropped mid-rewrite its catalog metadata is gone, so
-    * recovery could otherwise only recreate a default-layout table —
-    * silently flattening a bucketed target.
-    */
-  private def layoutPath(checkpointDir: String) =
-    new org.apache.hadoop.fs.Path(s"${snapshotDir(checkpointDir)}.layout")
-
-  private def saveLayout(
-      spark: SparkSession, checkpointDir: String, info: GraftBridge.TableInfo): Unit = {
-    val p = layoutPath(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      (Seq(info.provider.getOrElse(""), info.numBuckets.map(_.toString).getOrElse("")) ++
-        Seq(info.partitionColumnNames, info.bucketColumnNames, info.sortColumnNames)
-          .map(_.mkString(",")))
-        .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def loadLayout(
-      spark: SparkSession, checkpointDir: String): Option[GraftBridge.TableInfo] = {
-    val p = layoutPath(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.split("\n", -1).padTo(5, "")
-      def cols(s: String) = if (s.isEmpty) Nil else s.split(",").toSeq
-      Some(GraftBridge.TableInfo(
-        Option(lines(0)).filter(_.nonEmpty),
-        cols(lines(2)), cols(lines(3)), cols(lines(4)),
-        Option(lines(1)).filter(_.nonEmpty).map(_.toInt)))
-    }
-  }
-
-  /** Recovery half of the snapshot rewrite: if a crash landed between
-    * "target dropped" and "target rewritten", the last COMPLETE
-    * snapshot (parquet `_SUCCESS` marker) still sits in the checkpoint
-    * dir — restore the table from it (with its persisted layout, so a
-    * bucketed target comes back bucketed) so the checkpoint replay can
-    * resolve `spark.table(table)` and re-merge idempotently (the merge
-    * upserts the same compacted keys, so replay over the snapshot that
-    * already contains them is a no-op rewrite, not a duplication).
-    */
-  def recoverIfMissing(spark: SparkSession, table: String, checkpointDir: String): Boolean = {
-    val dir = snapshotDir(checkpointDir)
-    if (!spark.catalog.tableExists(table) && snapshotComplete(spark, dir)) {
-      val snap = spark.read.parquet(dir)
-      loadLayout(spark, checkpointDir) match {
-        case Some(info) => Loader.writeTableLike(snap, table, info)
-        case None => snap.write.mode("overwrite").saveAsTable(table)
-      }
-      true
-    } else false
-  }
-
-  /** One micro-batch merge: partition-bounded when the target is
-    * partitioned, snapshot-then-swap otherwise. Factored out of the
-    * sink so batch-shaped specs can exercise it directly.
+  /** One micro-batch merge: swap recovery, [[compactLatest]], then
+    * [[graft.ops.Loader.mergeInto]]. Factored out of the sink so
+    * batch-shaped specs can exercise it directly. The merge does not
+    * read `checkpointDir`: the sink hands it to Spark as the stream's
+    * checkpoint location, and the parameter stays for existing callers.
     */
   def mergeBatch(
       spark: SparkSession,
@@ -131,83 +51,9 @@ object StreamLoader {
       keys: Seq[String],
       seqCol: String,
       checkpointDir: String): Unit = {
-    recoverIfMissing(spark, table, checkpointDir)
-    val target = spark.table(table)
-    val staging = compactLatest(batch, keys, seqCol)
-      .select(target.columns.map(col).toIndexedSeq: _*)
-    val info = GraftBridge.tableInfo(spark, table)
-    // a backfill batch touching thousands of partitions would build an
-    // unbounded OR predicate on the driver AND rewrite most of the table
-    // anyway — past this bound the full snapshot rewrite is the cheaper,
-    // safer plan
-    val touched =
-      if (info.partitionColumnNames.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else staging.select(info.partitionColumnNames.map(col): _*)
-        .distinct().limit(MaxTouchedPartitions + 1).collect()
-    if (info.partitionColumnNames.nonEmpty && touched.length <= MaxTouchedPartitions) {
-      // ---- bounded rewrite: touch only the partitions the batch hits.
-      // The touched-partition list is a collect over the COMPACTED batch
-      // (tiny by construction); its literal predicates partition-prune
-      // the target scan, so the merge reads |touched partitions|, and
-      // dynamic partition overwrite swaps only those directories.
-      // Caveat (standard for partitioned CDC): a key's partition value
-      // must be immutable — a "moved" row would leave its old copy in
-      // the old partition, exactly as in Hive-style MERGEs.
-      val pcols = info.partitionColumnNames
-      val cond = touched.toSeq
-        .map(r => pcols.zipWithIndex
-          .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-          .reduce(_ && _))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val slice = target.filter(cond)
-      val merged = Loader.upsert(slice, staging, keys,
-        broadcastStaging = Some(true)) // a micro-batch is always small
-      // Spark refuses INSERT OVERWRITE on a table the plan also reads
-      // (UNSUPPORTED_OVERWRITE): spill the merged slice — bounded by the
-      // touched partitions, not the table — to a checkpoint-scoped tmp
-      // dir first, then overwrite from the tmp read
-      val tmp = s"${snapshotDir(checkpointDir)}-slice"
-      merged.write.mode("overwrite").parquet(tmp)
-      // dynamic mode via session conf: the writer-option spelling is not
-      // honored through insertInto on catalog tables, and static mode
-      // would TRUNCATE the untouched partitions
-      val confKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.get(confKey)
-      spark.conf.set(confKey, "dynamic")
-      try
-        spark.read.parquet(tmp)
-          .select(target.columns.map(col).toIndexedSeq: _*)
-          .write.mode("overwrite")
-          .insertInto(table)
-      finally {
-        spark.conf.set(confKey, prev)
-        // the slice is consumed the moment insertInto returns — delete
-        // it rather than leaving the last micro-batch's spill on disk
-        // for the lifetime of the checkpoint dir
-        val slicePath = new org.apache.hadoop.fs.Path(tmp)
-        slicePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(slicePath, true)
-        ()
-      }
-    } else {
-      val merged = Loader.upsert(target, staging, keys,
-        broadcastStaging = Some(true))
-      // full-snapshot fallback: spill the merge to a checkpoint-scoped
-      // parquet dir FIRST (the overwrite never reads the table it
-      // writes, and the completed snapshot doubles as the crash-recovery
-      // source above), then rewrite the catalog table from it,
-      // preserving the declared provider and bucket layout — a bucketed
-      // 100 TB target must not silently degrade to an unbucketed one on
-      // the first micro-batch. A transactional table format would
-      // replace this two-step at production scale; the MERGE plan itself
-      // is format-agnostic.
-      val tmp = snapshotDir(checkpointDir)
-      merged.write.mode("overwrite").parquet(tmp)
-      // layout persisted BEFORE the drop-and-rewrite inside saveAsTable:
-      // recovery can then restore a bucketed target AS bucketed
-      saveLayout(spark, checkpointDir, info)
-      Loader.writeTableLike(spark.read.parquet(tmp), table, info)
-    }
+    Loader.recoverFromSwap(spark, table)
+    Loader.mergeInto(spark, table, compactLatest(batch, keys, seqCol), keys,
+      broadcastStaging = Some(true))
   }
 
   /** Attach the merge sink to a streaming DataFrame: every micro-batch

@@ -27,6 +27,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally s.close()
     }
   }
+
+  /** The warehouse directory `graft.ops.Loader` stages partition
+    * overwrites under.
+    */
+  def stagingRoot: java.nio.file.Path = java.nio.file.Paths.get(
+    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "_graft_staging")
+
+  /** Staged slices of `table` still under [[stagingRoot]]: empty once
+    * every partition overwrite of `table` has cleaned up after itself.
+    */
+  def stagedSlices(table: String): Seq[String] =
+    if (!java.nio.file.Files.isDirectory(stagingRoot)) Nil
+    else {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.list(stagingRoot)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"$table.")).toList
+      finally s.close()
+    }
 }
 
 object SparkSpec {

@@ -58,6 +58,37 @@ class CorpusSpec extends SparkSpec {
       "unrelated packs must keep their checksums")
   }
 
+  test("writeShards: a re-run with fewer packs under a session-wide dynamic overwrite mode leaves no stale pack") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-shards-dyn").toString
+    val df = docsDF((1L to 12L).map(i => (i, s"tok$i " * i.toInt)))
+    Corpus.writeShards(df, Corpus.packGreedy(df, 8, 2), dir)
+    def packDirs(): Int = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "shards"))
+      try s.toArray.count(_.asInstanceOf[java.nio.file.Path].getFileName.toString
+        .startsWith("pack_id="))
+      finally s.close()
+    }
+    val packsBefore = packDirs()
+    val confKey = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(confKey)
+    spark.conf.set(confKey, "dynamic")
+    try {
+      val fewer = df.filter("doc_id <= 4")
+      val packed = Corpus.packGreedy(fewer, 8, 2)
+      val manifest = Corpus.writeShards(fewer, packed, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toMap
+      val expected = packed.groupBy("pack_id").count().collect()
+        .map(r => (r.getString(0), r.getLong(1))).toMap
+      assert(expected.size < packsBefore, "the re-run must produce fewer packs")
+      assert(packDirs() == expected.size, "a vanished pack's directory survived the re-run")
+      val onDisk = spark.read.parquet(s"$dir/shards").groupBy("pack_id").count()
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      assert(onDisk == expected && manifest == expected,
+        s"shards $onDisk / manifest $manifest diverge from the packed corpus $expected")
+      assert(spark.conf.get(confKey) == "dynamic", "writeShards changed the session conf")
+    } finally spark.conf.set(confKey, prev)
+  }
+
   test("segmentDedup: keep-first across corpus, reassembly in order, empty drops") {
     val df = docsDF(Seq(
       (1L, "a b c d e"),         // seg0 "a b c", seg1 "d e" — all first

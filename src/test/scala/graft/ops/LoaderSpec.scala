@@ -362,9 +362,10 @@ class LoaderSpec extends SparkSpec {
     // layout preserved through the in-place overwrite
     val info = org.apache.spark.sql.GraftBridge.tableInfo(spark, "part_merge_target")
     assert(info.partitionColumnNames == Seq("p"), s"layout changed: $info")
-    // the scratch slice table (appId-scoped name) is cleaned up
-    assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("part_merge_target_merge_slice_swap")))
+    // the staged slice (appId-scoped parquet directory) is cleaned up
+    assert(java.nio.file.Files.isDirectory(stagingRoot) &&
+      stagedSlices("part_merge_target").isEmpty,
+      s"staged slice left behind: ${stagedSlices("part_merge_target")}")
     spark.sql("DROP TABLE IF EXISTS part_merge_target")
   }
 
@@ -842,13 +843,16 @@ class LoaderSpec extends SparkSpec {
     assert(strays.isEmpty, s"restored release must clean its claim file: ${strays.toSeq}")
   }
 
-  test("wedged heartbeat: TTL reap fires, the owner's last-gate check refuses the destructive swap (r14 verdict #7)") {
-    import spark.implicits._
+  /** The wedged-heartbeat fixture (r14 verdict #7): runs `destructive`
+    * inside a lease on `table` whose heartbeat writes wedge, after the
+    * lease aged past a 1.2 s TTL and a second driver's reap took it;
+    * `check` gets the owner's refusal while the successor's lease is
+    * still on disk.
+    */
+  private def underReapedLease(table: String)(destructive: => Unit)(
+      check: IllegalStateException => Unit): Unit = {
     val prevTtl = spark.conf.getOption("spark.graft.lease.ttlMs")
     spark.conf.set("spark.graft.lease.ttlMs", "1200") // beat period 300 ms
-    dropWithLocation("lease_wedge_t")
-    Seq((1L, "a", 10.0)).toDF("k", "name", "v")
-      .write.mode("overwrite").saveAsTable("lease_wedge_t")
     val real = new Loader.NioLeaseFs
     val unwedge = new java.util.concurrent.CountDownLatch(1)
     @volatile var wedgedBeats = 0
@@ -875,12 +879,12 @@ class LoaderSpec extends SparkSpec {
         real.replace(s, d)
       def mkdirs(p: org.apache.hadoop.fs.Path) = real.mkdirs(p)
     }
-    val path = Loader.leaseFile(spark, "lease_wedge_t")
+    val path = Loader.leaseFile(spark, table)
     java.nio.file.Files.deleteIfExists(path)
     Loader.leaseFsOverride = Some(wedging)
     try {
       val err = intercept[IllegalStateException] {
-        Loader.withLease(spark, "lease_wedge_t") {
+        Loader.withLease(spark, table) {
           // wait out the TTL: every beat is wedged, so the lease ages
           val deadline = System.currentTimeMillis() + 15000
           while (wedgedBeats == 0 && System.currentTimeMillis() < deadline)
@@ -888,13 +892,34 @@ class LoaderSpec extends SparkSpec {
           assert(wedgedBeats > 0, "a beat must have wedged")
           Thread.sleep(Loader.leaseTtlMs(spark) + 500)
           // a second driver's TTL reap succeeds against the stale lease
-          Loader.acquireLease(spark, "lease_wedge_t")
-          // the owner's rewrite is still running — its destructive swap
-          // must fail LOUDLY at the last gate, before the drop
-          Loader.mergeInto(spark, "lease_wedge_t",
-            Seq((1L, "z", 0.0)).toDF("k", "name", "v"), Seq("k"))
+          Loader.acquireLease(spark, table)
+          destructive
         }
       }
+      check(err)
+    } finally {
+      unwedge.countDown()
+      Loader.leaseFsOverride = None
+      prevTtl match {
+        case Some(v) => spark.conf.set("spark.graft.lease.ttlMs", v)
+        case None    => spark.conf.unset("spark.graft.lease.ttlMs")
+      }
+      java.nio.file.Files.deleteIfExists(path)
+    }
+  }
+
+  test("wedged heartbeat: TTL reap fires, the owner's last-gate check refuses the destructive swap (r14 verdict #7)") {
+    import spark.implicits._
+    dropWithLocation("lease_wedge_t")
+    Seq((1L, "a", 10.0)).toDF("k", "name", "v")
+      .write.mode("overwrite").saveAsTable("lease_wedge_t")
+    val path = Loader.leaseFile(spark, "lease_wedge_t")
+    try underReapedLease("lease_wedge_t") {
+      // the owner's rewrite is still running — its destructive swap
+      // must fail LOUDLY at the last gate, before the drop
+      Loader.mergeInto(spark, "lease_wedge_t",
+        Seq((1L, "z", 0.0)).toDF("k", "name", "v"), Seq("k"))
+    } { err =>
       assert(err.getMessage.contains("lost mid-rewrite"), err.getMessage)
       assert(spark.catalog.tableExists("lease_wedge_t"),
         "the refused swap must not have dropped the target")
@@ -906,16 +931,38 @@ class LoaderSpec extends SparkSpec {
       assert(content.split(' ').lift(2).exists(_.startsWith("acq")),
         s"the successor's acquire content must be untouched: $content")
     } finally {
-      unwedge.countDown()
-      Loader.leaseFsOverride = None
-      prevTtl match {
-        case Some(v) => spark.conf.set("spark.graft.lease.ttlMs", v)
-        case None    => spark.conf.unset("spark.graft.lease.ttlMs")
-      }
-      java.nio.file.Files.deleteIfExists(path)
       spark.sql("DROP TABLE IF EXISTS lease_wedge_t")
       spark.sql(s"DROP TABLE IF EXISTS ${Loader.swapName("lease_wedge_t")}")
     }
+  }
+
+  test("wedged heartbeat: a refused partition overwrite restores the overwrite mode, removes its staged slice and changes no partition") {
+    import spark.implicits._
+    dropWithLocation("lease_wedge_part")
+    spark.range(0, 40)
+      .select(col("id").as("k"), (col("id") % 4).cast("int").as("p"),
+        col("id").cast("double").as("v"))
+      .write.mode("overwrite").partitionBy("p").saveAsTable("lease_wedge_part")
+    val before = fileInventory("lease_wedge_part")
+    val confKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.get(confKey)
+    try underReapedLease("lease_wedge_part") {
+      // key 5 stays in its home partition p=1: the bounded path stages
+      // the slice, then its last gate finds the lease lost
+      Loader.mergeInto(spark, "lease_wedge_part",
+        Seq((5L, 1, 55.0)).toDF("k", "p", "v"), Seq("k"))
+    } { err =>
+      assert(err.getMessage.contains("lost mid-rewrite"), err.getMessage)
+      assert(spark.conf.get(confKey) == modeBefore,
+        s"the refused overwrite leaked $confKey=${spark.conf.get(confKey)}")
+      assert(java.nio.file.Files.isDirectory(stagingRoot) &&
+        stagedSlices("lease_wedge_part").isEmpty,
+        s"staged slice left behind: ${stagedSlices("lease_wedge_part")}")
+      assert(fileInventory("lease_wedge_part") == before,
+        "the refused overwrite changed a partition")
+      assert(spark.table("lease_wedge_part").filter(col("k") === 5L)
+        .select("v").collect()(0).getDouble(0) == 5.0)
+    } finally spark.sql("DROP TABLE IF EXISTS lease_wedge_part")
   }
 
   test("single-writer lease: a stale lease (dead writer) is reaped, not honored") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.ops.Loader
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import java.nio.file.Files
@@ -119,6 +120,18 @@ class StreamLoaderSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS stream_merge_part_e2e")
   }
 
+  /** Nothing of a micro-batch merge is left behind: no swap table, no
+    * staged slice, and nothing in the checkpoint dir (the merge does not
+    * write there).
+    */
+  private def assertNoScratchLeft(table: String, ckpt: String): Unit = {
+    assert(!spark.catalog.tableExists(Loader.swapName(table)), "swap table left behind")
+    assert(stagedSlices(table).isEmpty, s"staged slice left behind: ${stagedSlices(table)}")
+    val s = Files.list(java.nio.file.Paths.get(ckpt))
+    try assert(s.count() == 0, s"mergeBatch wrote into the checkpoint dir $ckpt")
+    finally s.close()
+  }
+
   test("touched-partition cap: 256 stays bounded (slice cleaned), 257 falls back") {
     import spark.implicits._
     dropWithLocation("stream_merge_cap")
@@ -130,7 +143,7 @@ class StreamLoaderSpec extends SparkSpec {
     assert(untouched.nonEmpty)
 
     // exactly AT the cap (256 partitions): bounded path — the untouched
-    // partition's files survive byte-for-byte and the spilled slice is
+    // partition's files survive byte-for-byte and the staged slice is
     // deleted after the insert
     val ckpt1 = Files.createTempDirectory("sl_cap1_ckpt").toString
     val batchAt = (0 until 256).map(i => (i.toLong, "u", 2.0, f"d$i%03d", 10L))
@@ -139,23 +152,21 @@ class StreamLoaderSpec extends SparkSpec {
     spark.catalog.refreshTable("stream_merge_cap")
     assert(partFiles("stream_merge_cap", "dt=d257") == untouched,
       "bounded path rewrote an untouched partition at the cap boundary")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ckpt1, "merge-tmp-slice")),
-      "bounded-rewrite slice spill was not cleaned up")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt1, "merge-tmp")),
-      "bounded path must not produce a full snapshot")
+    assert(Files.isDirectory(stagingRoot), "the bounded path stages its slice")
+    assertNoScratchLeft("stream_merge_cap", ckpt1)
 
     // ONE past the cap (257 partitions): predicate growth stops — the
-    // fallback full-snapshot rewrite runs instead (snapshot + _SUCCESS
-    // in the checkpoint dir) and the merge is still correct
+    // full swap rewrite runs instead (d257's files are rewritten too)
+    // and the merge is still correct
     val ckpt2 = Files.createTempDirectory("sl_cap2_ckpt").toString
     val batchOver = (0 until 257).map(i => (i.toLong, "w", 3.0, f"d$i%03d", 20L))
       .toDF("k", "name", "v", "dt", "seq")
     StreamLoader.mergeBatch(spark, batchOver, "stream_merge_cap", Seq("k"), "seq", ckpt2)
     spark.catalog.refreshTable("stream_merge_cap")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ckpt2, "merge-tmp", "_SUCCESS")),
-      "over-cap batch did not take the snapshot fallback")
+    val d257After = partFiles("stream_merge_cap", "dt=d257")
+    assert(d257After.nonEmpty && d257After.keySet.intersect(untouched.keySet).isEmpty,
+      "over-cap batch did not take the full rewrite")
+    assertNoScratchLeft("stream_merge_cap", ckpt2)
     val rows = spark.table("stream_merge_cap").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(rows.size == 258)
@@ -193,37 +204,42 @@ class StreamLoaderSpec extends SparkSpec {
   test("crash between drop and rewrite: target restored from the snapshot") {
     import spark.implicits._
     dropWithLocation("stream_merge_crash")
+    dropWithLocation(Loader.swapName("stream_merge_crash"))
     Seq((1L, "a", 1.0)).toDF("k", "name", "v").write.saveAsTable("stream_merge_crash")
     val ckpt = Files.createTempDirectory("sl_crash_ckpt").toString
     val b1 = Seq((2L, "b", 2.0, 1L)).toDF("k", "name", "v", "seq")
     StreamLoader.mergeBatch(spark, b1, "stream_merge_crash", Seq("k"), "seq", ckpt)
-    // simulate the crash window of the snapshot fallback: the table is
-    // gone but the completed snapshot (parquet _SUCCESS) survives
-    dropWithLocation("stream_merge_crash")
-    assert(StreamLoader.recoverIfMissing(spark, "stream_merge_crash", ckpt))
-    val restored = spark.table("stream_merge_crash").orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(restored == Seq((1L, "a"), (2L, "b")))
-    // checkpoint replay of the same micro-batch is then idempotent
-    StreamLoader.mergeBatch(spark, b1, "stream_merge_crash", Seq("k"), "seq", ckpt)
-    spark.catalog.refreshTable("stream_merge_crash")
-    val replayed = spark.table("stream_merge_crash").orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(replayed == Seq((1L, "a"), (2L, "b")))
+    // simulate the crash window of the swap rewrite: the target is
+    // dropped and the complete merged snapshot sits in the swap table
+    Loader.renameTable(spark, "stream_merge_crash", Loader.swapName("stream_merge_crash"))
+    assert(!spark.catalog.tableExists("stream_merge_crash"))
+    // the checkpoint replay of the same micro-batch restores the target
+    // and is idempotent — twice over
+    for (_ <- 1 to 2) {
+      StreamLoader.mergeBatch(spark, b1, "stream_merge_crash", Seq("k"), "seq", ckpt)
+      spark.catalog.refreshTable("stream_merge_crash")
+      val replayed = spark.table("stream_merge_crash").orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(replayed == Seq((1L, "a"), (2L, "b")))
+      assertNoScratchLeft("stream_merge_crash", ckpt)
+    }
     spark.sql("DROP TABLE IF EXISTS stream_merge_crash")
   }
 
   test("crash recovery restores a BUCKETED target as bucketed (layout persisted)") {
     import spark.implicits._
     dropWithLocation("stream_merge_crash_bkt")
-    graft.ops.Loader.writeTableBucketed(
+    dropWithLocation(Loader.swapName("stream_merge_crash_bkt"))
+    Loader.writeTableBucketed(
       Seq((1L, "a", 1.0)).toDF("k", "name", "v"),
       "stream_merge_crash_bkt", Seq("k"), buckets = 4)
     val ckpt = Files.createTempDirectory("sl_crash_bkt_ckpt").toString
     val b1 = Seq((2L, "b", 2.0, 1L)).toDF("k", "name", "v", "seq")
     StreamLoader.mergeBatch(spark, b1, "stream_merge_crash_bkt", Seq("k"), "seq", ckpt)
-    dropWithLocation("stream_merge_crash_bkt")
-    assert(StreamLoader.recoverIfMissing(spark, "stream_merge_crash_bkt", ckpt))
+    Loader.renameTable(spark, "stream_merge_crash_bkt",
+      Loader.swapName("stream_merge_crash_bkt"))
+    StreamLoader.mergeBatch(spark, b1, "stream_merge_crash_bkt", Seq("k"), "seq", ckpt)
+    spark.catalog.refreshTable("stream_merge_crash_bkt")
     // the recovered table carries the ORIGINAL bucket spec, not a
     // default flattened layout (the scale invariant: recovery must not
     // silently degrade a bucketed 100 TB target)
@@ -236,10 +252,60 @@ class StreamLoaderSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS stream_merge_crash_bkt")
   }
 
+  test("moved row: a micro-batch that changes a matched key's partition leaves ONE copy") {
+    import spark.implicits._
+    dropWithLocation("stream_merge_moved")
+    Seq((1L, "a", 1.0, "d1"), (2L, "b", 2.0, "d2"))
+      .toDF("k", "name", "v", "dt")
+      .write.partitionBy("dt").saveAsTable("stream_merge_moved")
+    val ckpt = Files.createTempDirectory("sl_moved_ckpt").toString
+    // key 2 lives in d2; the batch moves it to d3
+    val batch = Seq((2L, "b2", 2.2, "d3", 10L)).toDF("k", "name", "v", "dt", "seq")
+    StreamLoader.mergeBatch(spark, batch, "stream_merge_moved", Seq("k"), "seq", ckpt)
+    spark.catalog.refreshTable("stream_merge_moved")
+    val rows = spark.table("stream_merge_moved").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(3))).toSeq
+    assert(rows == Seq((1L, "a", "d1"), (2L, "b2", "d3")), s"got $rows")
+    // a batch touching EVERY partition swaps two keys' partitions: the
+    // old copies sit inside the rewritten slice, still one copy each
+    val swapBatch = Seq((1L, "a3", 1.3, "d3", 20L), (2L, "b3", 2.3, "d1", 21L))
+      .toDF("k", "name", "v", "dt", "seq")
+    StreamLoader.mergeBatch(spark, swapBatch, "stream_merge_moved", Seq("k"), "seq", ckpt)
+    spark.catalog.refreshTable("stream_merge_moved")
+    val swapped = spark.table("stream_merge_moved").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(3))).toSeq
+    assert(swapped == Seq((1L, "a3", "d3"), (2L, "b3", "d1")), s"got $swapped")
+    spark.sql("DROP TABLE IF EXISTS stream_merge_moved")
+  }
+
+  test("a lease held by another writer: mergeBatch refuses loudly, target untouched") {
+    import spark.implicits._
+    dropWithLocation("stream_merge_leased")
+    Seq((1L, "a", 1.0)).toDF("k", "name", "v").write.saveAsTable("stream_merge_leased")
+    val ckpt = Files.createTempDirectory("sl_lease_ckpt").toString
+    val lease = Loader.leaseFile(spark, "stream_merge_leased")
+    // a SECOND writer holds the lease: acquireLease creates the file
+    // without registering it as held by this thread's rewriters
+    Loader.acquireLease(spark, "stream_merge_leased")
+    try {
+      val batch = Seq((1L, "z", 9.0, 1L)).toDF("k", "name", "v", "seq")
+      val e = intercept[IllegalStateException] {
+        StreamLoader.mergeBatch(spark, batch, "stream_merge_leased", Seq("k"), "seq", ckpt)
+      }
+      assert(e.getMessage.contains("stream_merge_leased") &&
+        e.getMessage.contains("being written"), e.getMessage)
+      assert(spark.table("stream_merge_leased").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "a")))
+    } finally {
+      Files.deleteIfExists(lease)
+      spark.sql("DROP TABLE IF EXISTS stream_merge_leased")
+    }
+  }
+
   test("bucketed unpartitioned target keeps its bucket layout through the sink") {
     import spark.implicits._
     dropWithLocation("stream_merge_bucketed")
-    graft.ops.Loader.writeTableBucketed(
+    Loader.writeTableBucketed(
       Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "name", "v"),
       "stream_merge_bucketed", Seq("k"), buckets = 4)
     val ckpt = Files.createTempDirectory("sl_bkt_ckpt").toString
