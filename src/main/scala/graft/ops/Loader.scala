@@ -1126,14 +1126,16 @@ object Loader {
   }
 
   /** MERGE an already-landed staging table into an existing catalog
-    * target, in place. Write amplification is BOUNDED BY THE STAGING
-    * BATCH, not the table, when the target is partitioned: the merge
-    * runs against only the partitions staging touches (literal
-    * predicates partition-prune the target scan) and dynamic partition
-    * overwrite replaces only those partitions' files — a 1-row staging
-    * batch into a 100 TB date-partitioned target rewrites one
-    * partition, never the table (the scale posture BigQuery's MERGE
-    * gives the reference for free, gcp_function.py:82-92).
+    * target, in place. The WRITE is bounded by the staging batch, not
+    * the table, when the target is partitioned: the merge runs against
+    * only the partitions staging touches (literal predicates
+    * partition-prune the target scan) and dynamic partition overwrite
+    * replaces only those partitions' files — a 1-row staging batch into
+    * a 100 TB date-partitioned target rewrites one partition, never the
+    * table (the scale posture BigQuery's MERGE gives the reference for
+    * free, gcp_function.py:82-92). The READ is bounded by the batch only
+    * when the moved-row guard below is free; otherwise its probe reads
+    * the key columns of every untouched partition.
     * Unpartitioned targets keep the snapshot-swap (inherently
     * O(|target|) without a transactional format), crash-recoverable via
     * [[recoverFromSwap]].
@@ -1143,11 +1145,14 @@ object Loader {
     * key's partition-column value must replace the old copy, not strand
     * it in the untouched partition. The bounded path ENFORCES this: when
     * the partition columns are a subset of the merge keys a match is
-    * pinned inside the touched slice by construction (guard free);
-    * otherwise a key-only probe — the complement slice, column-pruned to
-    * the keys, semi-joined against staging's broadcast distinct keys —
-    * detects any outside match and falls back to the full swap rewrite,
-    * whose anti-join drops the old copy wherever it lives.
+    * pinned inside the touched slice by construction, and when staging
+    * touches every partition there is no outside; in both cases the
+    * guard reads nothing. Otherwise a key-only probe — the complement
+    * slice, column-pruned to the keys, semi-joined against staging's
+    * broadcast distinct keys — reads the key columns of EVERY untouched
+    * partition (O(|table|) per batch on a date-partitioned target keyed
+    * without its date), and any outside match falls back to the full
+    * swap rewrite, whose anti-join drops the old copy wherever it lives.
     *
     * Remaining caveat: the per-partition overwrite is atomic per
     * partition, not across partitions.
@@ -1225,40 +1230,34 @@ object Loader {
   /** Replace the partitions `slice` holds rows for, leaving every other
     * partition's files untouched. Spark refuses INSERT OVERWRITE on a
     * table the plan also reads (UNSUPPORTED_OVERWRITE), so the slice —
-    * bounded by the partitions it covers, not the table — is staged as
-    * parquet first, under `warehouse/_graft_staging/` in a directory per
-    * table and application (two applications rewriting one target in a
-    * shared warehouse never clobber each other's slice), and deleted
-    * once the overwrite returns or fails. Dynamic mode goes through the
-    * session conf: the writer-option spelling is not honored through
-    * insertInto on catalog tables, and static mode would TRUNCATE the
-    * untouched partitions. The ownership assert and the conf flip sit
-    * inside the try: a lost lease must not leak
-    * partitionOverwriteMode=dynamic into the session or strand the
-    * staged slice.
+    * bounded by the partitions it covers, not the table — materializes
+    * first as an eager localCheckpoint (the graph folds' recipe,
+    * [[graft.ext.Similarity]]): one materialization severs the
+    * self-read lineage, and `insertInto` is the slice's only write. A
+    * checkpoint block lost before the insert fails the insert job before
+    * its commit, and dynamic overwrite commits partitions only at job
+    * commit, so the target is untouched and a replay of the batch is
+    * idempotent. Dynamic mode goes through the session conf: the
+    * writer-option spelling is not honored through insertInto on
+    * catalog tables, and static mode would TRUNCATE the untouched
+    * partitions. The ownership assert and the conf flip sit inside the
+    * try: a lost lease must not leak partitionOverwriteMode=dynamic into
+    * the session or leave the checkpoint persisted.
     */
   private def overwritePartitions(
       spark: org.apache.spark.sql.SparkSession,
       table: String,
       slice: DataFrame): Unit = {
-    val app = spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val tmp = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), "_graft_staging"),
-      s"${tableFileStem(table)}.$app")
     val confKey = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.get(confKey)
+    val staged = slice.localCheckpoint(true)
     try {
-      slice.write.mode("overwrite").parquet(tmp.toString)
       assertStillOwned(spark, table) // last gate before the overwrite
       spark.conf.set(confKey, "dynamic")
-      spark.read.parquet(tmp.toString)
-        .select(slice.columns.map(col).toIndexedSeq: _*)
-        .write.mode("overwrite")
-        .insertInto(table)
+      staged.write.mode("overwrite").insertInto(table)
     } finally {
       spark.conf.set(confKey, prev)
-      tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
-      ()
+      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(staged)
     }
   }
 
@@ -1276,20 +1275,22 @@ object Loader {
     * small files (per-file open/footer costs dominate scans long before
     * data volume does). Rewrites ONLY partitions whose file count
     * exceeds `maxFilesPerPartition`, byte-identical data (same rows,
-    * fewer files), via the same staged dynamic partition overwrite as
-    * the merge ([[overwritePartitions]]) — untouched partitions' files
-    * are never read or replaced. The OPTIMIZE/rewrite_data_files analogue
-    * of the transactional table formats, minus the transaction log this
-    * engine deliberately doesn't carry.
+    * fewer files), via the same checkpoint-staged dynamic partition
+    * overwrite as the merge ([[overwritePartitions]]) — untouched
+    * partitions' files are never read or replaced. The
+    * OPTIMIZE/rewrite_data_files analogue of the transactional table
+    * formats, minus the transaction log this engine deliberately doesn't
+    * carry.
     *
     * Overfull partitions are identified from the table's own file
     * listing (driver-side METADATA, no data motion), matched back to
     * partition values by unescaping the `col=value` path segments the
     * writer itself produced. The rewrite repartitions the slice by the
-    * partition columns, so each rewritten partition lands as ONE file
-    * set from one task group (production variant: salt by
-    * ⌈partition-bytes / target-file-bytes⌉ when single files would
-    * exceed block size — same plan, one extra key).
+    * partition columns (the checkpoint keeps that partitioning), so each
+    * rewritten partition lands as ONE file set from one task group
+    * (production variant: salt by ⌈partition-bytes / target-file-bytes⌉
+    * when single files would exceed block size — same plan, one extra
+    * key).
     *
     * Unpartitioned targets compact whole-table when the file count
     * crosses the threshold: a crash-recoverable snapshot-swap

@@ -16,36 +16,39 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def dropWithLocation(name: String, isDatabase: Boolean = false): Unit = {
     if (isDatabase) spark.sql(s"DROP DATABASE IF EXISTS `$name` CASCADE")
     else spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val wh = java.nio.file.Paths.get(
+    deleteTree(java.nio.file.Paths.get(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      if (isDatabase) s"$name.db" else name)
-    if (java.nio.file.Files.exists(wh)) {
+      if (isDatabase) s"$name.db" else name))
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
       import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(wh)
+      val s = java.nio.file.Files.walk(root)
       try s.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(java.nio.file.Files.delete)
       finally s.close()
     }
+
+  /** Run `body` and assert it staged nothing that outlives it: no RDD
+    * persisted during `body` is still persisted afterwards (the eager
+    * localCheckpoint `graft.ops.Loader` stages partition overwrites
+    * through is released), and no `_graft_staging` directory appears
+    * under the warehouse (where the overwrite once staged its slice as
+    * parquet; one left by an older build is removed first, so its
+    * absence afterwards means `body` created none).
+    */
+  def assertNoStagingLeft[T](body: => T): T = {
+    val stagingRoot = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "_graft_staging")
+    deleteTree(stagingRoot)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val out = body
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(held.isEmpty, s"RDDs persisted during the call are still persisted: $held")
+    assert(!java.nio.file.Files.exists(stagingRoot), s"$stagingRoot was created")
+    out
   }
-
-  /** The warehouse directory `graft.ops.Loader` stages partition
-    * overwrites under.
-    */
-  def stagingRoot: java.nio.file.Path = java.nio.file.Paths.get(
-    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "_graft_staging")
-
-  /** Staged slices of `table` still under [[stagingRoot]]: empty once
-    * every partition overwrite of `table` has cleaned up after itself.
-    */
-  def stagedSlices(table: String): Seq[String] =
-    if (!java.nio.file.Files.isDirectory(stagingRoot)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(stagingRoot)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith(s"$table.")).toList
-      finally s.close()
-    }
 }
 
 object SparkSpec {

@@ -343,7 +343,9 @@ class LoaderSpec extends SparkSpec {
     // one staged row, lands in partition p=2 (updates key 7)
     val staging = Seq((7L, 2, 777.0)).toDF("k", "p", "v")
       .select(col("k"), col("v"), col("p")) // column order must not matter
-    Loader.mergeInto(spark, "part_merge_target", staging, Seq("k"))
+    // nothing staged outlives the merge: no parquet staging directory,
+    // the slice's checkpoint released
+    assertNoStagingLeft(Loader.mergeInto(spark, "part_merge_target", staging, Seq("k")))
     // content: merged row present, everything else untouched
     val out = spark.table("part_merge_target").orderBy("k").collect()
     assert(out.length == 1000)
@@ -362,10 +364,6 @@ class LoaderSpec extends SparkSpec {
     // layout preserved through the in-place overwrite
     val info = org.apache.spark.sql.GraftBridge.tableInfo(spark, "part_merge_target")
     assert(info.partitionColumnNames == Seq("p"), s"layout changed: $info")
-    // the staged slice (appId-scoped parquet directory) is cleaned up
-    assert(java.nio.file.Files.isDirectory(stagingRoot) &&
-      stagedSlices("part_merge_target").isEmpty,
-      s"staged slice left behind: ${stagedSlices("part_merge_target")}")
     spark.sql("DROP TABLE IF EXISTS part_merge_target")
   }
 
@@ -412,6 +410,39 @@ class LoaderSpec extends SparkSpec {
     val out = spark.table("unmoved_merge_target").filter(col("k") === 6).collect()
     assert(out.length == 1 && out(0).getDouble(out(0).fieldIndex("v")) == 666.0)
     spark.sql("DROP TABLE IF EXISTS unmoved_merge_target")
+  }
+
+  test("moved-row guard: keys that include the partition column read no untouched partition") {
+    import spark.implicits._
+    dropWithLocation("pinned_merge_target")
+    spark.range(0, 40)
+      .select(col("id").as("k"), (col("id") % 4).cast("int").as("p"),
+        col("id").cast("double").as("v"))
+      .write.mode("overwrite").partitionBy("p").saveAsTable("pinned_merge_target")
+    // corrupt one data file of p=3, a partition the batch does not touch:
+    // any read of it fails the merge
+    val root = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "pinned_merge_target")
+    val victim = root.resolve(fileInventory("pinned_merge_target").keys
+      .filter(_.startsWith("p=3/")).toSeq.sorted.head)
+    java.nio.file.Files.write(victim, "not a parquet file".getBytes("UTF-8"))
+    val corrupt = java.nio.file.Files.readAllBytes(victim)
+    try {
+      val staging = Seq((5L, 1, 55.0)).toDF("k", "p", "v")
+      // keyed without the partition column, the moved-row probe reads the
+      // key column of every untouched partition and trips on the file
+      intercept[Exception](
+        Loader.mergeInto(spark, "pinned_merge_target", staging, Seq("k")))
+      // keyed with it, a match is pinned inside the touched slice: the
+      // guard reads nothing outside p=1 and the merge lands
+      Loader.mergeInto(spark, "pinned_merge_target", staging, Seq("k", "p"))
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(victim), corrupt),
+        "the untouched partition's file changed")
+      val p1 = spark.table("pinned_merge_target").filter(col("p") === 1)
+        .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(p1 == (1L until 40L by 4).map(k => (k, if (k == 5L) 55.0 else k.toDouble)),
+        s"got $p1")
+    } finally dropWithLocation("pinned_merge_target")
   }
 
   test("partitioned target: inserts into a NEW partition leave existing ones untouched") {
@@ -519,7 +550,7 @@ class LoaderSpec extends SparkSpec {
     assert(filesIn(before, "p=1") > Loader.CompactMaxFiles &&
       filesIn(before, "p=2") > Loader.CompactMaxFiles,
       s"fixture must be fragmented: ${before.keys.toSeq.sorted}")
-    val n = Loader.compact(spark, "compact_part_target")
+    val n = assertNoStagingLeft(Loader.compact(spark, "compact_part_target"))
     assert(n == 2, s"exactly the two overfull partitions rewrite, got $n")
     val after = fileInventory("compact_part_target")
     assert(filesIn(after, "p=1") <= Loader.CompactMaxFiles &&
@@ -535,8 +566,10 @@ class LoaderSpec extends SparkSpec {
     assert(dataAfter == dataBefore, "compaction must be byte-identical on rows")
     // idempotent: a second pass is a clean no-op
     assert(Loader.compact(spark, "compact_part_target") == 0)
-    assert(!spark.catalog.tableExists(
-      s"compact_part_target_compact_swap_${spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")}"))
+    // the partitioned branch goes through no swap table
+    val swaps = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => t.startsWith("compact_part_target") && t.contains("swap"))
+    assert(swaps.isEmpty, s"swap table left behind: ${swaps.toSeq}")
     spark.sql("DROP TABLE IF EXISTS compact_part_target")
   }
 
@@ -946,7 +979,7 @@ class LoaderSpec extends SparkSpec {
     val before = fileInventory("lease_wedge_part")
     val confKey = "spark.sql.sources.partitionOverwriteMode"
     val modeBefore = spark.conf.get(confKey)
-    try underReapedLease("lease_wedge_part") {
+    try assertNoStagingLeft(underReapedLease("lease_wedge_part") {
       // key 5 stays in its home partition p=1: the bounded path stages
       // the slice, then its last gate finds the lease lost
       Loader.mergeInto(spark, "lease_wedge_part",
@@ -955,14 +988,80 @@ class LoaderSpec extends SparkSpec {
       assert(err.getMessage.contains("lost mid-rewrite"), err.getMessage)
       assert(spark.conf.get(confKey) == modeBefore,
         s"the refused overwrite leaked $confKey=${spark.conf.get(confKey)}")
-      assert(java.nio.file.Files.isDirectory(stagingRoot) &&
-        stagedSlices("lease_wedge_part").isEmpty,
-        s"staged slice left behind: ${stagedSlices("lease_wedge_part")}")
       assert(fileInventory("lease_wedge_part") == before,
         "the refused overwrite changed a partition")
       assert(spark.table("lease_wedge_part").filter(col("k") === 5L)
         .select("v").collect()(0).getDouble(0) == 5.0)
-    } finally spark.sql("DROP TABLE IF EXISTS lease_wedge_part")
+    }) finally spark.sql("DROP TABLE IF EXISTS lease_wedge_part")
+  }
+
+  test("checkpoint-staged overwrite: blocks lost before the insert fail it loudly, change no partition, and a replay lands") {
+    import spark.implicits._
+    dropWithLocation("ckpt_lost_part")
+    spark.range(0, 40)
+      .select(col("id").as("k"), (col("id") % 4).cast("int").as("p"),
+        col("id").cast("double").as("v"))
+      .write.mode("overwrite").partitionBy("p").saveAsTable("ckpt_lost_part")
+    val before = fileInventory("ckpt_lost_part")
+    val confKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.get(confKey)
+    // key 5 updates in p=1, key 41 inserts into p=1: the bounded path
+    val staging = Seq((5L, 1, 55.0), (41L, 1, 41.0)).toDF("k", "p", "v")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val merging = Thread.currentThread()
+    @volatile var fired = false
+    @volatile var dropped = Set.empty[Int]
+    // the merging thread's first lease read is the last gate, which sits
+    // between the checkpoint and insertInto: drop the checkpoint's blocks
+    // there, as an executor loss would
+    val real = new Loader.NioLeaseFs
+    val dropping = new Loader.LeaseFs {
+      def read(p: org.apache.hadoop.fs.Path): String = {
+        if (!fired && (Thread.currentThread() eq merging)) {
+          fired = true
+          val fresh = spark.sparkContext.getPersistentRDDs -- persistedBefore
+          fresh.values.foreach(_.unpersist(blocking = true))
+          dropped = fresh.keySet.toSet
+        }
+        real.read(p)
+      }
+      def write(p: org.apache.hadoop.fs.Path, s: String) = real.write(p, s)
+      def delete(p: org.apache.hadoop.fs.Path) = real.delete(p)
+      def exists(p: org.apache.hadoop.fs.Path) = real.exists(p)
+      def promote(s: org.apache.hadoop.fs.Path, d: org.apache.hadoop.fs.Path) =
+        real.promote(s, d)
+      def replace(s: org.apache.hadoop.fs.Path, d: org.apache.hadoop.fs.Path) =
+        real.replace(s, d)
+      def mkdirs(p: org.apache.hadoop.fs.Path) = real.mkdirs(p)
+    }
+    java.nio.file.Files.deleteIfExists(Loader.leaseFile(spark, "ckpt_lost_part"))
+    Loader.leaseFsOverride = Some(dropping)
+    try {
+      val err = try intercept[Exception](
+        Loader.mergeInto(spark, "ckpt_lost_part", staging, Seq("k")))
+      finally Loader.leaseFsOverride = None
+      assert(dropped.nonEmpty, "the hook must have dropped the staged checkpoint")
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(e => Option(e.getMessage).exists(_.contains("Checkpoint block"))),
+        s"the insert must fail on the lost checkpoint block: $err")
+      assert(fileInventory("ckpt_lost_part") == before,
+        "the failed overwrite changed a partition")
+      assert(spark.conf.get(confKey) == modeBefore,
+        s"the failed overwrite leaked $confKey=${spark.conf.get(confKey)}")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+        "the failed overwrite left an RDD persisted")
+      // the replay of the same batch, without the fault, lands it
+      Loader.mergeInto(spark, "ckpt_lost_part", staging, Seq("k"))
+      spark.catalog.refreshTable("ckpt_lost_part")
+      val out = spark.table("ckpt_lost_part").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(out.size == 41 && out(5L) == 55.0 && out(41L) == 41.0 && out(6L) == 6.0,
+        s"got $out")
+      val after = fileInventory("ckpt_lost_part")
+      assert(after.filterNot(_._1.startsWith("p=1")) ==
+        before.filterNot(_._1.startsWith("p=1")),
+        "the replay rewrote an untouched partition")
+    } finally spark.sql("DROP TABLE IF EXISTS ckpt_lost_part")
   }
 
   test("single-writer lease: a stale lease (dead writer) is reaped, not honored") {

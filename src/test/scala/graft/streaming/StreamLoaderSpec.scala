@@ -120,13 +120,14 @@ class StreamLoaderSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS stream_merge_part_e2e")
   }
 
-  /** Nothing of a micro-batch merge is left behind: no swap table, no
-    * staged slice, and nothing in the checkpoint dir (the merge does not
-    * write there).
+  /** Run the micro-batch merge `body` and assert nothing of it is left
+    * behind: no swap table, no staging directory or persisted staged
+    * slice ([[assertNoStagingLeft]]), and nothing in the checkpoint dir
+    * (the merge does not write there).
     */
-  private def assertNoScratchLeft(table: String, ckpt: String): Unit = {
+  private def assertNoScratchLeft(table: String, ckpt: String)(body: => Unit): Unit = {
+    assertNoStagingLeft(body)
     assert(!spark.catalog.tableExists(Loader.swapName(table)), "swap table left behind")
-    assert(stagedSlices(table).isEmpty, s"staged slice left behind: ${stagedSlices(table)}")
     val s = Files.list(java.nio.file.Paths.get(ckpt))
     try assert(s.count() == 0, s"mergeBatch wrote into the checkpoint dir $ckpt")
     finally s.close()
@@ -144,16 +145,16 @@ class StreamLoaderSpec extends SparkSpec {
 
     // exactly AT the cap (256 partitions): bounded path — the untouched
     // partition's files survive byte-for-byte and the staged slice is
-    // deleted after the insert
+    // released after the insert
     val ckpt1 = Files.createTempDirectory("sl_cap1_ckpt").toString
     val batchAt = (0 until 256).map(i => (i.toLong, "u", 2.0, f"d$i%03d", 10L))
       .toDF("k", "name", "v", "dt", "seq")
-    StreamLoader.mergeBatch(spark, batchAt, "stream_merge_cap", Seq("k"), "seq", ckpt1)
+    assertNoScratchLeft("stream_merge_cap", ckpt1) {
+      StreamLoader.mergeBatch(spark, batchAt, "stream_merge_cap", Seq("k"), "seq", ckpt1)
+    }
     spark.catalog.refreshTable("stream_merge_cap")
     assert(partFiles("stream_merge_cap", "dt=d257") == untouched,
       "bounded path rewrote an untouched partition at the cap boundary")
-    assert(Files.isDirectory(stagingRoot), "the bounded path stages its slice")
-    assertNoScratchLeft("stream_merge_cap", ckpt1)
 
     // ONE past the cap (257 partitions): predicate growth stops — the
     // full swap rewrite runs instead (d257's files are rewritten too)
@@ -161,12 +162,13 @@ class StreamLoaderSpec extends SparkSpec {
     val ckpt2 = Files.createTempDirectory("sl_cap2_ckpt").toString
     val batchOver = (0 until 257).map(i => (i.toLong, "w", 3.0, f"d$i%03d", 20L))
       .toDF("k", "name", "v", "dt", "seq")
-    StreamLoader.mergeBatch(spark, batchOver, "stream_merge_cap", Seq("k"), "seq", ckpt2)
+    assertNoScratchLeft("stream_merge_cap", ckpt2) {
+      StreamLoader.mergeBatch(spark, batchOver, "stream_merge_cap", Seq("k"), "seq", ckpt2)
+    }
     spark.catalog.refreshTable("stream_merge_cap")
     val d257After = partFiles("stream_merge_cap", "dt=d257")
     assert(d257After.nonEmpty && d257After.keySet.intersect(untouched.keySet).isEmpty,
       "over-cap batch did not take the full rewrite")
-    assertNoScratchLeft("stream_merge_cap", ckpt2)
     val rows = spark.table("stream_merge_cap").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(rows.size == 258)
@@ -216,12 +218,13 @@ class StreamLoaderSpec extends SparkSpec {
     // the checkpoint replay of the same micro-batch restores the target
     // and is idempotent — twice over
     for (_ <- 1 to 2) {
-      StreamLoader.mergeBatch(spark, b1, "stream_merge_crash", Seq("k"), "seq", ckpt)
+      assertNoScratchLeft("stream_merge_crash", ckpt) {
+        StreamLoader.mergeBatch(spark, b1, "stream_merge_crash", Seq("k"), "seq", ckpt)
+      }
       spark.catalog.refreshTable("stream_merge_crash")
       val replayed = spark.table("stream_merge_crash").orderBy("k").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq
       assert(replayed == Seq((1L, "a"), (2L, "b")))
-      assertNoScratchLeft("stream_merge_crash", ckpt)
     }
     spark.sql("DROP TABLE IF EXISTS stream_merge_crash")
   }
