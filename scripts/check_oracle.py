@@ -8,13 +8,27 @@ Runs each oracle_sql.json entry in DuckDB against the sfDir parquet
 tables and value-compares with the Spark parquet dump (columns sorted
 by name, exact match). Dev tool only — not part of the library.
 """
-import duckdb, json, os, sys
+import duckdb, json, os, shutil, sys, tempfile
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_r6"
 only = set(sys.argv[3:])
 
-con = duckdb.connect()
+# DuckDB's memory_limit bounds the buffer memory its operators RESERVE,
+# not what they touch: the list-heavy graph-walk oracles reserve past
+# the default (80% of RAM, 12.5 GiB on a 15 GB box) and fail to pin a
+# block while the process stays near 2 GB resident
+# (graph_search_hnsw_embeddings: 1.96 GB peak RSS under a 20 GB limit;
+# d4_select_embeddings fails under 10 GB, 2.26 GB peak RSS under 12 GB).
+# Spill to a temporary directory; preserve_insertion_order=false lets
+# operators spill without keeping row order (every oracle ends in its
+# own total ORDER BY)
+spill = tempfile.mkdtemp(prefix="check_oracle_", dir="/tmp")
+con = duckdb.connect(config={
+    "memory_limit": "20GB",
+    "temp_directory": spill,
+    "preserve_insertion_order": False,
+})
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     p = f"{sf}/{t}.parquet"
@@ -69,5 +83,7 @@ for k in sorted(oracle):
     except AssertionError as e:
         print(f"FAIL  {k}: {str(e).splitlines()[0]}")
         n_fail += 1
+con.close()
+shutil.rmtree(spill, ignore_errors=True)
 print(f"\n{n_ok} ok, {n_fail} fail, {n_skip} skipped")
 sys.exit(1 if n_fail else 0)

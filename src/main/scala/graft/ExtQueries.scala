@@ -623,8 +623,9 @@ object ExtQueries {
     * hops expand over (`kg` for the full walk, `kgr` for the
     * cell-restricted serving face), `extraCtes` injects the
     * restriction CTEs after the shared graph chain. ONE text for both
-    * declared walks, mirroring the engine's one [[Similarity.graphSearch]]
-    * kernel behind [[Similarity.graphSearchClustered]].
+    * declared walks: [[Similarity.graphSearch]]'s kernel, and
+    * [[Similarity.graphSearchClustered]]'s gathered walk, which keeps
+    * that kernel's contract row for row.
     */
   private def graphSearchOracle(edge: String, extraCtes: String): String = {
     def searchRound(prev: String, r: Int): String =

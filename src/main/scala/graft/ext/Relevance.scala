@@ -293,10 +293,11 @@ object Relevance {
     try {
       val total = counts.agg(coalesce(sum("cnt"), lit(0L))).collect()(0).getLong(0)
       // a tokenless training corpus yields total = 0, and every later
-      // backoff would compute ln(alpha·c/0) = +Inf — which round4's
-      // BigDecimal rejects as an OPAQUE NumberFormatException deep in
-      // generated code (or a failed micro-batch on the streaming
-      // face). Fail HERE, at build time, with the cause named.
+      // backoff would compute ln(alpha·c/0) = +Inf — which round4
+      // passes through unchanged (as Spark's round does), so every
+      // score the model gives would be a silent ±Inf/NaN on the batch
+      // and the streaming face alike. Fail HERE, at build time, with
+      // the cause named.
       require(total > 0,
         "bigram model training corpus has no [a-z]+ tokens — " +
           "cannot train a backoff distribution (total token count is 0)")

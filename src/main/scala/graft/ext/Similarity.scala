@@ -1690,6 +1690,37 @@ object Similarity {
     * further. Deterministic given the frozen quantizer — the declared
     * key's oracle replicates the restriction as a WHERE on the edge
     * CTE — and IO is bounded by the probed cells, never the graph.
+    *
+    * GATHERED READ: the pruned subgraph is read once and every round
+    * walks on the driver, instead of a join, a distinct, a rank window
+    * and an eager checkpoint per round:
+    *  1. the probe rows with their embeddings and probed cells (one
+    *     narrow job; the distinct cells are taken on the driver);
+    *  2. in one collect, the probed cells' edges, `probe_id → vec_id`,
+    *     from the pruned scan, and `(vec_id, label, embedding)` of the
+    *     entry ids and every edge target (a left-semi join against a
+    *     broadcast id relation, whose broadcast is one more job).
+    * The walk keeps [[beamSearchFrom]]'s contract row for row: the
+    * same candidate rule, ids with no corpus row dropped (the inner
+    * join), duplicate entry ids kept (the explode), the same cosine
+    * kernel through [[graft.functions.VectorOps.round6]], and Spark's
+    * double ordering with the `vec_id` tie-break (NaN first, nulls
+    * last). The result is the walked rows as a local relation under a
+    * one-partition global `ORDER BY (probe_id, cosine desc, vec_id)`:
+    * collecting it is one job with no exchange, and nothing stays
+    * pinned.
+    *
+    * MEMORY BOUND and SIZE ROUTE: the driver holds the probe batch
+    * (driver-resident by the serving contract — the distributed kernel
+    * broadcasts it), the probed cells' edges and the embeddings those
+    * edges reach. That is bounded by the probed cells, which is every
+    * cell once `nProbe·|probes| ≥ nCentroids`. So the gathered read
+    * runs only while the pruned edge files' bytes (a driver-side
+    * listing, no job) stay within the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the bound Spark puts on a
+    * relation it gathers. Past it, when it is `-1`, or when an id
+    * column is not BIGINT, the same pruned edge frame is walked
+    * distributed by [[graphSearch]].
     */
   def graphSearchClustered(
       embeddings: DataFrame,
@@ -1700,10 +1731,124 @@ object Similarity {
       nProbe: Int = 4,
       beam: Int = 10,
       rounds: Int = 3): DataFrame = {
-    val cells = probeCellIds(probes, centroids, nProbe)
-    graphSearch(embeddings,
-      storedEdges.filter(col("g_cell").isin(cells: _*)).drop("g_cell"),
-      probes, entryIds, beam, rounds)
+    require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    require(beam >= 1, s"beam must be >= 1: $beam")
+    val probeRows = probes.select(col("probe_id"), col("embedding"),
+      probedCellIds(centroids, nProbe)).collect()
+    val cells = probeRows.flatMap(_.getSeq[Long](2)).distinct.sorted.toSeq
+    val edges = storedEdges.filter(col("g_cell").isin(cells: _*)).drop("g_cell")
+    val limit = org.apache.spark.sql.GraftBridge
+      .autoBroadcastThreshold(embeddings.sparkSession)
+    val longIds = Seq(probes.schema("probe_id"), embeddings.schema("vec_id"),
+      edges.schema("probe_id"), edges.schema("vec_id"))
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+    if (limit < 0 || !longIds || scannedBytes(edges) > limit)
+      graphSearch(embeddings, edges, probes, entryIds, beam, rounds)
+    else gatheredWalk(embeddings, edges, probeRows, probes.schema("probe_id"),
+      entryIds, beam, rounds)
+  }
+
+  /** Bytes `df` reads: the pruned listing of its file scans (driver-side,
+    * no job) when every leaf is a file scan, else the optimizer's size
+    * estimate.
+    */
+  private def scannedBytes(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val leaves = df.queryExecution.sparkPlan.collectLeaves()
+    if (leaves.nonEmpty && leaves.forall(_.isInstanceOf[FileSourceScanExec]))
+      leaves.collect { case f: FileSourceScanExec =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .flatMap(_.files).map(_.getLen).sum
+      }.sum
+    else df.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue)).toLong
+  }
+
+  /** One scored candidate of the gathered walk (`cosine` null when
+    * either embedding is null, as the plan's cosine is).
+    */
+  private final case class Hit(vecId: Long, label: Any, cosine: java.lang.Double)
+
+  /** Spark's `ORDER BY cosine DESC, vec_id` over [[Hit]]s: NaN is the
+    * greatest double, nulls sort last.
+    */
+  private val hitOrder: Ordering[Hit] = (a, b) => {
+    val c =
+      if (a.cosine == null) { if (b.cosine == null) 0 else 1 }
+      else if (b.cosine == null) -1
+      else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(b.cosine, a.cosine)
+    if (c != 0) c else java.lang.Long.compare(a.vecId, b.vecId)
+  }
+
+  /** [[graphSearchClustered]]'s driver-side walk over the gathered
+    * subgraph (see there for the reads and the contract).
+    */
+  private def gatheredWalk(
+      embeddings: DataFrame,
+      edges: DataFrame,
+      probeRows: Array[org.apache.spark.sql.Row],
+      probeIdField: org.apache.spark.sql.types.StructField,
+      entryIds: Seq[Long],
+      beam: Int,
+      rounds: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val spark = embeddings.sparkSession
+    def floats(r: Row, i: Int): Array[Float] =
+      if (r.isNullAt(i)) null else r.getSeq[Float](i).toArray
+    // each probe id's embeddings, one per probe row (the kernel's probe
+    // join); a null probe id joins nothing
+    val probeEmbs = probeRows.filterNot(_.isNullAt(0))
+      .groupBy(_.getLong(0)).map { case (p, rs) => p -> rs.map(floats(_, 1)) }
+    val walked = if (probeEmbs.isEmpty) Seq.empty[Row] else {
+      // the edges and the embeddings of the entry ids and every edge
+      // target come back in ONE collect (the id relation's broadcast is
+      // the only other job), told apart by `_edge`
+      val pairs = edges.select(col("probe_id"), col("vec_id"))
+      val entry = spark.createDataFrame(entryIds.distinct.map(Row(_)).asJava,
+        StructType(Seq(StructField("vec_id", LongType, nullable = false))))
+      val reached = embeddings.select(col("vec_id"), col("label"), col("embedding"))
+        .join(broadcast(pairs.select("vec_id").unionByName(entry)), Seq("vec_id"),
+          "left_semi")
+      val (edgeRows, corpusRows) = pairs
+        .select(lit(true).as("_edge"), col("probe_id"), col("vec_id"),
+          lit(null).cast(embeddings.schema("label").dataType).as("label"),
+          lit(null).cast(embeddings.schema("embedding").dataType).as("embedding"))
+        .unionByName(reached.select(lit(false).as("_edge"),
+          lit(null).cast(LongType).as("probe_id"), col("vec_id"), col("label"),
+          col("embedding")))
+        .collect().partition(_.getBoolean(0))
+      val out = edgeRows.filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+        .groupBy(_.getLong(1)).map { case (v, rs) => v -> rs.map(_.getLong(2)) }
+      val corpus = corpusRows.groupBy(_.getLong(2))
+        .map { case (v, rs) => v -> rs.map(r => (r.get(3), floats(r, 4))) }
+      probeEmbs.keys.toSeq.sorted.flatMap { p =>
+        val pes = probeEmbs(p)
+        def ranked(cand: Seq[Long]): Seq[Hit] = cand.flatMap { v =>
+          corpus.getOrElse(v, Array.empty[(Any, Array[Float])]).toSeq.flatMap {
+            case (label, e) => pes.map(pe => Hit(v, label,
+              if (pe == null || e == null) null
+              else graft.functions.VectorOps.round6(
+                graft.functions.VectorOps.cosine(pe, e))))
+          }
+        }.sorted(hitOrder).take(beam)
+        var cur = ranked(Seq.fill(pes.length)(entryIds).flatten)
+        for (_ <- 1 to rounds) {
+          val beamIds = cur.map(_.vecId).distinct
+          cur = ranked((beamIds ++ beamIds.flatMap(out.getOrElse(_, Array.empty[Long])))
+            .distinct)
+        }
+        cur.map(h => Row(p, h.vecId, h.label, h.cosine))
+      }
+    }
+    // already in order; the one-partition global sort keeps the total
+    // ORDER BY every served result ends in, at no exchange
+    spark.createDataFrame(walked.asJava, StructType(Seq(probeIdField,
+      StructField("vec_id", LongType), embeddings.schema("label"),
+      StructField("cosine", DoubleType))))
+      .coalesce(1).orderBy(col("probe_id"), col("cosine").desc, col("vec_id"))
   }
 
   /** Layer-`l` membership predicate of the HNSW hierarchy: the
@@ -2287,16 +2432,22 @@ object Similarity {
       probes: DataFrame,
       centroids: Seq[(Long, Seq[Float])],
       nProbe: Int,
-      carry: Seq[String] = Nil): DataFrame = {
+      carry: Seq[String] = Nil): DataFrame =
+    probes.select(
+      col("probe_id") +: col("embedding").as("_pe") +: carry.map(col) :+
+        explode(probedCellIds(centroids, nProbe)).as("centroid_id"): _*)
+
+  /** The `nProbe` probed cell ids of the row's `embedding`, ranked
+    * nearest first — the array [[probeCellsOf]] explodes.
+    */
+  private def probedCellIds(
+      centroids: Seq[(Long, Seq[Float])], nProbe: Int): Column = {
     val scored = array(centroids.map { case (cid, v) =>
       val cvec = array(v.map(lit): _*)
       struct(round(-cosine(col("embedding"), cvec), 6).as("d"),
         lit(cid).as("cid"))
     }.toIndexedSeq: _*)
-    probes.select(
-      col("probe_id") +: col("embedding").as("_pe") +: carry.map(col) :+
-        explode(transform(slice(array_sort(scored), 1, nProbe),
-          x => x.getField("cid"))).as("centroid_id"): _*)
+    transform(slice(array_sort(scored), 1, nProbe), x => x.getField("cid"))
   }
 
   /** Hard-NEGATIVE mining — the contrastive-training data-prep step of

@@ -10,21 +10,25 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 object VectorOps {
 
   /** Round-half-up at 6 dp — the JVM twin of Spark's `round(col, 6)`
-    * (BigDecimal HALF_UP). THE portable-rounding contract every
-    * driver-side 6-dp value must go through (streaming JVM argmins,
-    * PQ ADC tables): one definition, so a rounding-mode change cannot
-    * leave a second copy stale.
+    * (BigDecimal HALF_UP; NaN and ±Inf come back unchanged, as Spark's
+    * `round` returns them — `BigDecimal` would throw on them). THE
+    * portable-rounding contract every driver-side 6-dp value must go
+    * through (streaming JVM argmins, PQ ADC tables, the gathered graph
+    * walk): one definition, so a rounding-mode change cannot leave a
+    * second copy stale.
     */
-  def round6(d: Double): Double =
-    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  def round6(d: Double): Double = roundHalfUp(d, 6)
 
   /** Round-half-up at 4 dp — the LM-score twin of [[round6]] (the
     * 4-dp `round(avg(ln …))` contract of the LM/DSIR score family),
     * for JVM kernels that must reproduce those scores off-plan
     * ([[BigramScore]]).
     */
-  def round4(d: Double): Double =
-    BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+  def round4(d: Double): Double = roundHalfUp(d, 4)
+
+  private def roundHalfUp(d: Double, scale: Int): Double =
+    if (d.isNaN || d.isInfinite) d
+    else BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** [[Hashing.bandKey]] over a catalyst long-array — the SAME band-key
     * function for batch plans and streaming state keys, so their bucket
@@ -128,7 +132,12 @@ object VectorOps {
     val rmicros = new Array[Long](dim)
     var i = 0
     while (i < dim) {
-      rmicros(i) = math.round(round6(v.getFloat(i).toDouble * s) * 1e6)
+      val r = round6(v.getFloat(i).toDouble * s)
+      // integer micro-units have no NaN/Inf: refuse rather than let
+      // math.round turn a non-finite component into a silent 0
+      require(!r.isNaN && !r.isInfinite,
+        s"randomProject: non-finite embedding component at index $i")
+      rmicros(i) = math.round(r * 1e6)
       i += 1
     }
     val out = new Array[Double](kOut)

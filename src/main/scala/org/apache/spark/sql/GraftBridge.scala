@@ -35,6 +35,13 @@ object GraftBridge {
       m.bucketSpec.map(_.numBuckets))
   }
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, as
+    * the planner reads it (`-1` = broadcasting off). `SessionState` is
+    * `private[sql]`, hence the accessor.
+    */
+  def autoBroadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
   /** Drain the async listener bus so `QueryExecutionListener` callbacks
     * registered by specs have fired before assertions read them.
     * `SparkContext.listenerBus` is `private[spark]`, hence the accessor.

@@ -135,9 +135,10 @@ class PruningSpec extends SparkSpec {
       Similarity.writeGraphClustered(Similarity.knnGraph(e, k = 4),
         Similarity.ivfAssignPortableTo(e, cents), path)
       // a bounded probe batch (2 probes × nProbe 4 ≤ 8 cells): the
-      // exact edge frame graphSearchClustered's hop joins consume —
-      // the walk materializes eagerly, so the scan shape is pinned on
-      // the restricted frame itself
+      // exact edge frame graphSearchClustered reads — gathered once for
+      // the driver-side walk, or hop-joined past the broadcast
+      // threshold; either way its result plan no longer shows the
+      // scan, so the scan shape is pinned on the restricted frame itself
       val probes = e.filter(col("vec_id").isin(0L, 1L))
         .select(col("vec_id").as("probe_id"), col("embedding"))
       val cells = Similarity.probeCellIds(probes, cents, nProbe = 4)

@@ -49,6 +49,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!java.nio.file.Files.exists(stagingRoot), s"$stagingRoot was created")
     out
   }
+
+  /** Run `body` and count the Spark jobs it started: jobs carry a
+    * per-call local property (inherited by the broadcast and AQE stage
+    * threads Spark starts for them), so jobs of other threads are not
+    * counted; the listener bus is drained before the count is read.
+    */
+  def jobsRun[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.waitListeners(spark)
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

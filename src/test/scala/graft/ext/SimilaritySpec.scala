@@ -1282,6 +1282,119 @@ class SimilaritySpec extends SparkSpec {
     graft.core.CacheScope.releaseAll()
   }
 
+  /** The r16 clustered fixture persisted as a [[Similarity.writeGraphClustered]]
+    * layout, plus the gathered walk's edge cases: vertices whose
+    * embeddings copy an existing one (score ties, broken by `vec_id`),
+    * a zero vector, a NaN component, a null embedding, an edge to an id
+    * with no corpus row, and duplicated edges. Only the clean vertices
+    * own edges; the edge-case vertices are reached by them. The probes
+    * add a zero embedding given as two rows of one probe id, and a null
+    * embedding.
+    */
+  private lazy val gatheredFixture = {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(19)
+    val dim = 16; val nClust = 8; val perC = 40
+    val centers = Array.fill(nClust, dim)(rnd.nextGaussian().toFloat)
+    val clean = (0 until nClust).flatMap { c =>
+      (0 until perC).map { i =>
+        ((i * nClust + c).toLong,
+          centers(c).map(x => x + 0.08f * rnd.nextGaussian().toFloat).toSeq, c)
+      }
+    }
+    val byId = clean.map(r => r._1 -> r._2).toMap
+    val dupOf = Seq(3L, 17L, 42L, 100L)
+    val edgeCases = dupOf.zipWithIndex.map { case (v, i) => Row(1000L + i, byId(v), 9) } ++
+      Seq(Row(1100L, Seq.fill(dim)(0.0f), 9),
+        Row(1101L, byId(5L).updated(2, Float.NaN), 9),
+        Row(1102L, null, 9))
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = false)),
+      StructField("label", IntegerType, nullable = false)))
+    val base = clean.toDF("vec_id", "embedding", "label")
+    val fix = spark.createDataFrame(
+      (clean.map { case (v, e, l) => Row(v, e, l) } ++ edgeCases).asJava, schema)
+    val cents = Similarity.seedCentroids(base, 16)
+    val g = Similarity.knnGraph(base, k = 4)
+    val hubs = clean.map(_._1).filter(_ % 10 == 0)
+    val extra = (dupOf.zipWithIndex.map { case (v, i) => (v, 1000L + i) } ++
+      hubs.flatMap(h => Seq(1100L, 1101L, 1102L, 7777L).map(h -> _)))
+      .toDF("probe_id", "vec_id")
+      .select(col("probe_id"), col("vec_id"), lit(9).as("label"), lit(0.0).as("cosine"))
+    val path = java.nio.file.Files.createTempDirectory("gsc_gathered")
+      .resolve("graph").toString
+    Similarity.writeGraphClustered(
+      g.unionByName(extra).unionByName(g.filter(col("probe_id") % 3 === 0)),
+      Similarity.ivfAssignPortableTo(base, cents), path)
+    val probes = spark.createDataFrame(
+      (clean.filter { case (v, _, _) => v % 37 == 0 || dupOf.contains(v) }
+        .map { case (v, e, _) => Row(v, e) } ++
+        Seq.fill(2)(Row(5000L, Seq.fill(dim)(0.0f))) :+ Row(5001L, null)).asJava,
+      StructType(schema.fields.take(1).map(_.copy(name = "probe_id")) :+ schema.fields(1)))
+    (fix, spark.read.parquet(path), probes, cents)
+  }
+
+  test("graphSearchClustered: the gathered walk equals graphSearch over the pruned edges row for row (edge cases; both routes)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val (fix, stored, probes, cents) = gatheredFixture
+    // a duplicated entry id keeps its duplicate rows (the copies crowd
+    // the first beam of the zero and null probes, whose scores all tie,
+    // and the zero probe's two rows multiply them); an entry id with no
+    // corpus row drops out
+    val entry = cents.map(_._1) ++ Seq.fill(3)(cents.head._1) :+ 8888L
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d) // bit-exact, NaN-safe
+      case x => x
+    }).toSeq
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    for (nProbe <- Seq(4, cents.length); batch <- Seq(probes, probes.limit(0));
+         threshold <- Seq(None, Some("-1"))) {
+      val what = s"nProbe=$nProbe, ${if (batch eq probes) "batch" else "empty batch"}, " +
+        s"threshold=${threshold.getOrElse("default")}"
+      threshold.foreach(spark.conf.set(thresholdKey, _))
+      try {
+        val pruned = stored.filter(col("g_cell")
+          .isin(Similarity.probeCellIds(batch, cents, nProbe): _*)).drop("g_cell")
+        val want = rows(Similarity.graphSearch(fix, pruned, batch, entry,
+          beam = 10, rounds = 3))
+        val served = Similarity.graphSearchClustered(fix, stored, batch, cents, entry,
+          nProbe = nProbe, beam = 10, rounds = 3)
+        val gathered = served.queryExecution.analyzed.collectLeaves()
+          .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        assert(gathered == threshold.isEmpty, s"$what: wrong route (gathered: $gathered)")
+        assert(rows(served) == want, s"$what: the served walk diverged")
+        if (batch eq probes) {
+          // the fixture's edge cases reached the compared rows
+          val got = served.collect()
+          assert(got.exists(r => !r.isNullAt(3) && r.getDouble(3).isNaN), s"$what: no NaN score")
+          assert(got.exists(_.isNullAt(3)), s"$what: no null score")
+          assert(got.exists(r => r.getLong(1) >= 1000L && r.getLong(1) < 1004L),
+            s"$what: no duplicated embedding scored")
+        } else assert(want.isEmpty, s"$what: rows for an empty batch")
+      } finally if (threshold.nonEmpty) spark.conf.unset(thresholdKey)
+    }
+    graft.core.CacheScope.releaseAll()
+  }
+
+  test("graphSearchClustered: job budget at fixture size (ROADMAP item 5)") {
+    val (fix, stored, probes, cents) = gatheredFixture
+    // a budget may only go down. The gathered read: the probe batch (a
+    // local relation here, so no job), the broadcast of the id relation,
+    // the one collect of the pruned edges and reached embeddings, and
+    // the collect of the sorted result; the per-round join walk it
+    // replaces ran 35 jobs for 12 probes in the vector_maintain benchmark
+    val (out, jobs) = jobsRun(Similarity.graphSearchClustered(fix, stored, probes,
+      cents, cents.map(_._1), nProbe = 4, beam = 10, rounds = 3).collect())
+    info(s"graphSearchClustered: $jobs jobs")
+    assert(out.nonEmpty)
+    assert(jobs <= 3, s"graphSearchClustered ran $jobs jobs, budget 3")
+  }
+
   test("hnswSearch: geometric layer sizes; the descent lands in the probe's cluster (r16)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
