@@ -112,7 +112,7 @@ object Similarity {
       .toIndexedSeq.map(r => r.getLong(0) -> r.getSeq[Float](1))
 
   /** Lloyd k-means over cosine assignment: each iteration is one
-    * distributed pass (narrow literal-argmin assignment + per-dimension
+    * distributed pass (narrow nearest-centroid assignment + per-dimension
     * mean via posexplode/groupBy), then a k×dim collect — the ONLY
     * driver-side data is the centroid matrix itself. Empty clusters keep
     * their previous centroid.
@@ -133,7 +133,7 @@ object Similarity {
     * Lloyd iteration ([[nearestCentroidTwoLevel]]): per-row cost drops
     * from O(k·dim) to O(2√k·dim), which is what keeps TRAINING
     * sub-linear when nCentroids scales ∝ corpus (at k=512 the flat
-    * literal argmin dominates the whole train phase — SCALE.md r9).
+    * argmin dominates the whole train phase — SCALE.md r9).
     * The trajectory is Lloyd-on-approximate-assignment (the standard
     * hierarchical/IVF k-means trade); centroids differ slightly from
     * the flat run, which SemDeDup tolerates by construction (the paper
@@ -145,13 +145,11 @@ object Similarity {
       nCentroids: Int,
       iterations: Int = 3,
       superK: Int = 0): Seq[(Long, Seq[Float])] =
-    // AUTO-ROUTE past the literal-plan cliff (r15 — the r14
-    // knnGraphHier recipe applied to the trainer): past
-    // [[GraphLiteralMaxTerms]] plan floats the two-level CASE chain
-    // stops being buildable/compilable, so each Lloyd iteration
-    // assigns via the broadcast-join kernel instead — spec-pinned
-    // bit-equal to the literal assignment, so the switch is purely
-    // physical
+    // AUTO-ROUTE at [[GraphLiteralMaxTerms]] (r15 — the r14
+    // knnGraphHier recipe applied to the trainer): past that many
+    // superProbe·k·dim terms each Lloyd iteration assigns via the
+    // broadcast-join kernel instead — spec-pinned bit-equal to the
+    // expression assignment, so the switch is purely physical
     kMeansLoopDf(embeddings, nCentroids, iterations, portable = false,
       (df, cents) =>
         if (SuperProbeDefault.toLong * cents.size * cents.head._2.length >
@@ -171,7 +169,7 @@ object Similarity {
   /** The Lloyd loop over a FRAME-level assigner (r15): the join-based
     * assignment kernels are DataFrame transforms, not column
     * expressions, so the loop takes `(frame, centroids) => assigned
-    * frame` — the literal paths wrap their Column in [[kMeansLoop]].
+    * frame` — the in-plan paths wrap their Column in [[kMeansLoop]].
     */
   private def kMeansLoopDf(
       embeddings: DataFrame,
@@ -251,15 +249,11 @@ object Similarity {
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
       .sortBy(_._1).toSeq)
 
-  /** Assign every vector to its nearest centroid in ONE narrow
-    * projection: the tiny centroid set is folded into literal
-    * expressions (nCentroids codegen'd cosine kernels per row, zero
-    * exchanges). The crossJoin+window alternative shuffles nCentroids×
-    * the data just to pick an argmin.
-    */
-  /** Literal-argmin nearest-centroid expression over `embedding`:
-    * array_min over struct(dist, centroid_id) = argmin with the same
-    * (dist asc, centroid_id asc) tie-break as an ORDER BY would give.
+  /** Nearest-centroid expression over `embedding`: the argmin of
+    * `(d = -cosine, cid)` with the same (d asc, cid asc) tie-break as an
+    * ORDER BY would give, in ONE narrow projection (zero exchanges; the
+    * crossJoin+window alternative shuffles nCentroids× the data just to
+    * pick an argmin).
     */
   def nearestCentroid(centroids: Seq[(Long, Seq[Float])]): Column =
     nearestCentroidStruct(centroids).getField("cid")
@@ -268,12 +262,50 @@ object Similarity {
     * the composable form the two-level assignment min-merges across its
     * probed super-cells.
     */
-  private def nearestCentroidStruct(centroids: Seq[(Long, Seq[Float])]): Column = {
-    val scored = array(centroids.map { case (cid, v) =>
-      val cvec = array(v.map(lit): _*)
-      struct((-cosine(col("embedding"), cvec)).as("d"), lit(cid).as("cid"))
-    }.toIndexedSeq: _*)
-    array_min(scored)
+  private def nearestCentroidStruct(centroids: Seq[(Long, Seq[Float])]): Column =
+    rankCentroids(centroids, rounded = false)
+
+  /** One [[graft.functions.NearestCentroidExpr]] over `embedding`: the
+    * centroids ride as one packed matrix, not as `k·dim` float literals,
+    * so the plan and its generated code stay O(1) in `k·dim`. `topN =
+    * None` is the argmin struct `(d, cid)`; `Some(n)` the `n` best
+    * structs ascending. `rounded` compares `d` at 6 dp (the portable
+    * form).
+    */
+  private def rankCentroids(
+      centroids: Seq[(Long, Seq[Float])],
+      rounded: Boolean,
+      topN: Option[Int] = None): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.functions.NearestCentroidExpr(
+      org.apache.spark.sql.GraftBridge.expression(col("embedding")),
+      graft.functions.CentroidMatrix(centroids), rounded, topN))
+
+  /** Stage A of every two-level kernel: the ids (indices into `cells`)
+    * of the `superProbe` super-centroids nearest the row's `embedding`,
+    * best first — unrounded `-cosine`, ties on the lower index.
+    */
+  private def probedSuperIds(
+      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
+      superProbe: Int): Seq[Column] = {
+    val ranked = rankCentroids(
+      cells.zipWithIndex.map { case ((sv, _), si) => si.toLong -> sv },
+      rounded = false, topN = Some(superProbe))
+    (1 to superProbe).map(p => element_at(ranked, p).getField("cid"))
+  }
+
+  /** Per probed super-cell ([[probedSuperIds]]), `arm` over that cell's
+    * members, picked by a CASE chain over the cells — each chain
+    * evaluates only the arm its super id selects.
+    */
+  private def probedArms(
+      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
+      superProbe: Int)(arm: Seq[(Long, Seq[Float])] => Column): Seq[Column] = {
+    val branches = cells.zipWithIndex.map { case ((_, members), si) => si -> arm(members) }
+    probedSuperIds(cells, superProbe).map { sid =>
+      branches.tail.foldLeft(when(sid === lit(branches.head._1), branches.head._2)) {
+        case (acc, (si, a)) => acc.when(sid === lit(si), a)
+      }
+    }
   }
 
   def ivfAssignTo(
@@ -309,13 +341,8 @@ object Similarity {
     * `(d = -cosine@6dp, cid)` — for callers that need the winning
     * similarity as well as the id (cell diagnostics).
     */
-  def nearestCentroidScoredPortable(centroids: Seq[(Long, Seq[Float])]): Column = {
-    val scored = array(centroids.map { case (cid, v) =>
-      val cvec = array(v.map(lit): _*)
-      struct(round(-cosine(col("embedding"), cvec), 6).as("d"), lit(cid).as("cid"))
-    }.toIndexedSeq: _*)
-    array_min(scored)
-  }
+  def nearestCentroidScoredPortable(centroids: Seq[(Long, Seq[Float])]): Column =
+    rankCentroids(centroids, rounded = true)
 
   /** Per-cell IVF index diagnostics over the deterministic seed
     * centroids: vector count and the min/mean/max similarity of each
@@ -325,7 +352,7 @@ object Similarity {
     * 100 TB failure mode of a badly-seeded IVF), and low member
     * similarity means the partitioning is effectively random.
     *
-    * Plan: one narrow literal-argmin pass (same kernel as the IVF
+    * Plan: one narrow argmin pass (same kernel as the IVF
     * queries — no crossJoin, no shuffle of the vectors) into a
     * ≤nCentroids-group map-side-combined aggregate. Min/max are
     * order-insensitive picks of 6-dp values; the similarity MASS is
@@ -363,7 +390,7 @@ object Similarity {
     * sims, DECIMAL(10,6)-exact sums, 4-dp drift; cells empty in both
     * populations don't report.
     *
-    * Scale: both aggregates are narrow literal-argmin passes +
+    * Scale: both aggregates are narrow argmin passes +
     * map-side-combined per-cell rollups — the corpus never shuffles by
     * anything but centroid_id counts (one row per populated cell).
     */
@@ -403,7 +430,7 @@ object Similarity {
     * The Lloyd-trained index ([[buildIvfIndex]]) is the production
     * variant (float means chain through summation order, so its
     * centroids are not portably SQL-expressible); this variant shares
-    * its entire plan shape — literal-argmin narrow assignment,
+    * its entire plan shape — narrow argmin assignment,
     * broadcast probe-list semi-join — so the oracle's verdict covers
     * the execution path, not just a toy.
     */
@@ -640,7 +667,7 @@ object Similarity {
   }
 
   /** [[knnGraph]] with BOTH sides two-level — the production variant
-    * at corpus-scaled nCentroids, where the flat literal argmin's
+    * at corpus-scaled nCentroids, where the flat argmin's
     * O(n·k·dim) assignment dominates (measured 18.5×/decade at k ∝ n,
     * SCALE.md r13 — the same law D4's flat path hit): assignment via
     * [[nearestCentroidTwoLevel]], probe lists via the two-level
@@ -652,14 +679,18 @@ object Similarity {
     * (≤ superProbe) both stages fall back to the flat ranking, so the
     * hier variant degrades to [[knnGraph]] EXACTLY (spec-pinned).
     */
-  /** Literal-expression budget for the two-level graph kernels
-    * (superProbe·nCentroids·dim floats in the probe CASE chains):
-    * nc=640/dim=64/superProbe=2 sits at ~82k terms and measured
-    * 19.6 s literal vs 1.26 s as data (SCALE.md r14) — compilation
-    * dominates well before the plan stops building. [[knnGraphHier]]
-    * auto-routes to [[knnGraphHierJoin]] above this budget; the two
-    * are spec-pinned bit-identical, so the switch is purely physical
-    * (nc=160 at ~20k terms stays literal, where literals win).
+  /** Route threshold of the two-level kernels, in superProbe·nCentroids·dim
+    * terms: above it [[knnGraphHier]], [[kMeansCentroidsFast]],
+    * [[semanticPairsHier]] and the append family take the broadcast-join
+    * twins ([[knnGraphHierJoin]] etc.), spec-pinned bit-identical, so the
+    * switch is purely physical. The value was measured while each term
+    * was a float LITERAL in the CASE chains (nc=640/dim=64/superProbe=2,
+    * ~82k terms: 19.6 s literal vs 1.26 s as data, SCALE.md r14 —
+    * compilation dominated). The chains now hold one
+    * [[graft.functions.NearestCentroidExpr]] per arm, whose matrix is
+    * data, so that cliff is gone; where the in-plan path now stops
+    * winning is unmeasured, and the threshold stays until an sf1/sf10
+    * A/B moves it.
     */
   val GraphLiteralMaxTerms: Long = 50000L
 
@@ -685,11 +716,12 @@ object Similarity {
     // recomputes internally behind nearestCentroidTwoLevel's fixed API,
     // the one remaining duplicate run
     val cells = superCells(cents, k0)
-    // route past the literal-plan cliff: the probe-list CASE chains
-    // carry ~superProbe·k·dim literal floats — as data instead when
-    // that exceeds the budget (bit-identical result, measured 15.5×
-    // at nc=640). The collected cents/cells ride along — the route
-    // never re-runs the seed collect or the driver Lloyd (r14 review)
+    // route at [[GraphLiteralMaxTerms]]: past ~superProbe·k·dim terms
+    // the probe lists and assignment run as broadcast joins
+    // (bit-identical result; measured 15.5× at nc=640 when the CASE
+    // chains held literal floats). The collected cents/cells ride
+    // along — the route never re-runs the seed collect or the driver
+    // Lloyd (r14 review)
     if (cents.nonEmpty &&
         superProbe.toLong * cents.size * cents.head._2.length > GraphLiteralMaxTerms)
       return knnGraphHierJoinWith(embeddings, cents, cells, k, nProbe, superProbe)
@@ -709,7 +741,7 @@ object Similarity {
   /** The two-level analogue of [[probeCellsOf]]'s per-row cell
     * ranking: rank ≈√k super-centroids, concatenate the `superProbe`
     * best supers' member (dist, cid) structs, and take the `nProbe`
-    * best cells of that union — plan size O(superProbe·k·dim) like
+    * best cells of that union — one matrix expression per CASE arm like
     * [[nearestCentroidTwoLevel]], per-row kernels ≈(1+superProbe)·√k
     * instead of k. Ranking convention matches [[probeCellsOf]]
     * (6-dp cosine desc, cid asc) so the fallback (supers ≤ superProbe
@@ -721,53 +753,34 @@ object Similarity {
       nProbe: Int,
       superProbe: Int): Column = {
     require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    def cellStructs(members: Seq[(Long, Seq[Float])]): Column =
-      array(members.map { case (cid, v) =>
-        struct(round(-cosine(col("embedding"), array(v.map(lit): _*)), 6).as("d"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
-    val union =
-      if (cells.size <= superProbe) cellStructs(centroids)
-      else {
-        val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-          struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-            lit(si).as("sid"))
-        }.toIndexedSeq: _*))
-        val branches = cells.zipWithIndex.map { case ((_, members), si) =>
-          si -> cellStructs(members)
-        }
-        def branchFor(sidCol: Column): Column =
-          branches.tail.foldLeft(
-            when(sidCol === lit(branches.head._1), branches.head._2)) {
-            case (acc, (si, arm)) => acc.when(sidCol === lit(si), arm)
-          }
-        concat((1 to superProbe).map(p =>
-          branchFor(element_at(ranked, p).getField("sid"))): _*)
-      }
-    transform(slice(array_sort(union), 1, nProbe), x => x.getField("cid"))
+    if (cells.size <= superProbe) probedCellIds(centroids, nProbe)
+    else {
+      // each arm is its cell's own nProbe best, so the union's nProbe
+      // best are the whole union's
+      val union = concat(probedArms(cells, superProbe)(
+        rankCentroids(_, rounded = true, topN = Some(nProbe))): _*)
+      transform(slice(array_sort(union), 1, nProbe), x => x.getField("cid"))
+    }
   }
 
   /** [[probeCellsTwoLevel]] with the member-cell ranking as a broadcast
-    * JOIN — probe lists as DATA, for the k-regime where the literal
-    * probe expressions stop compiling (SCALE.md r13 named the cliff:
-    * past k·dim ≈ 10⁵ literal terms plan construction/compilation
-    * itself dominates — nc=640 hier measured 40.2 s, WORSE than
-    * nc=160 — and SemDeDup-production 50k cells × dim 768 ≈ 7.7×10⁷
-    * literal floats cannot build a plan at all). The
+    * JOIN — probe lists as DATA, the route above [[GraphLiteralMaxTerms]]
+    * (SCALE.md r13 measured the literal CASE chains' cliff: past
+    * k·dim ≈ 10⁵ literal terms plan construction/compilation dominated
+    * — nc=640 hier 40.2 s, WORSE than nc=160). The
     * [[ivfAssignTwoLevelJoin]] join-shape applied to the probe side:
     *
-    *  - stage A ranks the ≈√k super-centroids as LITERALS — plan size
-    *    O(√k·dim) (50k cells, dim 768: √k ≈ 224 supers ≈ 1.7×10⁵ plan
-    *    floats, three orders under the literal path's 7.7×10⁷);
+    *  - stage A ranks the ≈√k super-centroids in-plan
+    *    ([[probedSuperIds]], one matrix expression);
     *  - stage B explodes the `superProbe` probed super ids and
     *    broadcast-joins the (sid, cid, cvec) member TABLE — one 6-dp
-    *    cosine kernel per candidate row, the same rounded kernel
-    *    [[probeCellsTwoLevel]]'s `cellStructs` evaluates literally;
+    *    cosine kernel per candidate row, the same rounded score
+    *    [[probeCellsTwoLevel]]'s arms compute in-plan;
     *  - stage C takes the `nProbe` best (d, cid) per probe with a
     *    sort-sliced collect_list — the aggregate analogue of the
-    *    literal path's array_sort + slice. Cells are disjoint, so the
+    *    in-plan path's array_sort + slice. Cells are disjoint, so the
     *    (d, cid) pairs are unique and array_sort erases the collect
-    *    order: the probed cell list is BIT-IDENTICAL to the literal
+    *    order: the probed cell list is BIT-IDENTICAL to the in-plan
     *    path's however tasks interleave (spec-pinned).
     *
     * Cost shape: n·superProbe·√k candidate rows through ONE
@@ -782,21 +795,16 @@ object Similarity {
       superProbe: Int): DataFrame = {
     require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
     if (cells.size <= superProbe)
-      // probing every super IS the flat ranking — same fallback (and
-      // same literal plan, safely under the cliff) as the literal path
+      // probing every super IS the flat ranking — the same fallback
+      // as the in-plan path
       probeCellsOf(probes, centroids, nProbe)
     else {
       val spark = probes.sparkSession
       import spark.implicits._
       val memberDf = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
-        ms.map { case (cid, v) => (si, cid, v) }
+        ms.map { case (cid, v) => (si.toLong, cid, v) }
       }.toDF("sid", "cid", "cvec")
-      val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-        struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-          lit(si).as("sid"))
-      }.toIndexedSeq: _*))
-      val probeSids = array(
-        (1 to superProbe).map(p => element_at(ranked, p).getField("sid")): _*)
+      val probeSids = array(probedSuperIds(cells, superProbe): _*)
       // the aggregate sees ONLY narrow (probe_id, (d, cid)) rows — the
       // probe embedding is scored map-side in the broadcast-join stage
       // and re-attached by an id-keyed join AFTER the per-probe slice:
@@ -824,9 +832,9 @@ object Similarity {
   /** [[knnGraphHier]] with BOTH per-row stages as broadcast joins —
     * centroids AND probe lists as DATA ([[ivfAssignTwoLevelJoin]] for
     * the assignment, [[probeCellsTwoLevelJoin]] for the probe lists) —
-    * the graph-build path past the literal-expression cliff (SCALE.md
+    * the graph-build route above [[GraphLiteralMaxTerms]] (SCALE.md
     * r13; r13 verdict #2). Probed cell sets and assignments are
-    * BIT-IDENTICAL to [[knnGraphHier]]'s literal two-level path
+    * BIT-IDENTICAL to [[knnGraphHier]]'s in-plan two-level path
     * (spec-pinned), and the shared [[graphTail]] keeps edge semantics
     * one kernel; with few enough super-cells (≤ superProbe) both
     * stages fall back to the same flat path as [[knnGraphHier]], so
@@ -851,7 +859,7 @@ object Similarity {
     * the assignment stage shares them too — one seed collect and one
     * driver Lloyd per graph build, never per stage (r14 review
     * finding; the same de-duplication the r13 fix made inside the
-    * literal path).
+    * in-plan path).
     */
   private def knnGraphHierJoinWith(
       embeddings: DataFrame,
@@ -1170,10 +1178,10 @@ object Similarity {
       batchAssigned: DataFrame) // (centroid_id, vec_id, embedding, label)
 
   /** The assignment + probe-cell kernels the append family runs,
-    * ROUTED past the literal-plan cliff exactly like the graph
-    * builders (r17 — the production-nc append): under the
-    * [[GraphLiteralMaxTerms]] budget, the PORTABLE literal kernels the
-    * declared keys freeze (oracle-checkable 6-dp argmin); above it,
+    * ROUTED at [[GraphLiteralMaxTerms]] exactly like the graph
+    * builders (r17 — the production-nc append): under it, the
+    * PORTABLE flat kernels the declared keys freeze (oracle-checkable
+    * 6-dp argmin); above it,
     * the two-level broadcast-join kernels over the same FROZEN
     * centroid matrix ([[twoLevelJoinAssignedWith]] /
     * [[probeCellsTwoLevelJoin]], super-cells derived deterministically
@@ -1905,7 +1913,7 @@ object Similarity {
     // `nCentroidsOf = Some(n => n/cellSize)` (the SemDeDup nc ∝ corpus
     // law — fixed nc makes the flat kernel's candidate mass quadratic
     // per decade) and `hier = true` to route through the two-level
-    // join kernel past the literal-plan cliff, exactly as knn-graph
+    // join kernel above [[GraphLiteralMaxTerms]], exactly as knn-graph
     // builds do (SCALE.md r15)
     def build(sub: DataFrame): DataFrame = {
       val nc = nCentroidsOf.map(f => f(sub.count())).getOrElse(16)
@@ -2078,7 +2086,7 @@ object Similarity {
     //
     // PRODUCTION nc (r17): `nCentroids` sets the base layout's cell
     // count and `nCentroidsOf` the per-layer build/layout nc ∝ layer
-    // size — at nc past the literal-plan cliff every assignment routes
+    // size — at nc above [[GraphLiteralMaxTerms]] every assignment routes
     // through the two-level join kernels ([[appendKernels]]), and the
     // landmark STAR stays at 16 seeds regardless (≤16 extra edges per
     // vertex is the hierarchy's design constant, not a layout knob).
@@ -2421,14 +2429,15 @@ object Similarity {
   /** Per-probe probed-cell expansion — the stage shared by
     * [[knnJoinAssigned]], [[knnJoinPq]], and [[hardNegativesAssigned]]
     * (ONE definition, so a cell-ranking or tie-break fix moves all
-    * three): the broadcast centroid matrix ranks per probe as a single
-    * LITERAL expression (narrow, no exchange, no per-centroid row
-    * blowup), and the top `nProbe` cell ids explode to one row per
+    * three): the centroid matrix ranks per probe as a single
+    * [[graft.functions.NearestCentroidExpr]] (narrow, no exchange, no
+    * per-centroid row blowup, and a plan that does not grow with
+    * k·dim), and the top `nProbe` cell ids explode to one row per
     * (probe, probed cell). `carry` names extra probe columns to keep
     * through the expansion (e.g. the probe's label for negative
     * mining).
     */
-  private def probeCellsOf(
+  private[ext] def probeCellsOf(
       probes: DataFrame,
       centroids: Seq[(Long, Seq[Float])],
       nProbe: Int,
@@ -2442,12 +2451,8 @@ object Similarity {
     */
   private def probedCellIds(
       centroids: Seq[(Long, Seq[Float])], nProbe: Int): Column = {
-    val scored = array(centroids.map { case (cid, v) =>
-      val cvec = array(v.map(lit): _*)
-      struct(round(-cosine(col("embedding"), cvec), 6).as("d"),
-        lit(cid).as("cid"))
-    }.toIndexedSeq: _*)
-    transform(slice(array_sort(scored), 1, nProbe), x => x.getField("cid"))
+    transform(rankCentroids(centroids, rounded = true, topN = Some(nProbe)),
+      x => x.getField("cid"))
   }
 
   /** Hard-NEGATIVE mining — the contrastive-training data-prep step of
@@ -3241,8 +3246,8 @@ object Similarity {
     * common subexpression of the probe branches (evaluated once per row
     * under whole-stage codegen), and each probe's CASE chain evaluates
     * ONLY the branch its super id selects. Plan SIZE is
-    * O(superProbe·k·dim) literals (each member kernel appears once per
-    * probe chain) — the same order the flat argmin already carries.
+    * O(superProbe·√k) nodes: each arm is one matrix expression over its
+    * cell's members, so no centroid float enters the plan.
     * `superK = 0` → ⌈√k⌉.
     */
   def nearestCentroidTwoLevel(
@@ -3255,21 +3260,8 @@ object Similarity {
     // probing every cell IS the flat argmin — skip the detour
     if (cells.size <= superProbe) nearestCentroid(centroids)
     else {
-      val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-        struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-          lit(si).as("sid"))
-      }.toIndexedSeq: _*))
-      val branches = cells.zipWithIndex.map { case ((_, members), si) =>
-        si -> nearestCentroidStruct(members)
-      }
-      def branchFor(sidCol: Column): Column =
-        branches.tail.foldLeft(
-          when(sidCol === lit(branches.head._1), branches.head._2)) {
-          case (acc, (si, arm)) => acc.when(sidCol === lit(si), arm)
-        }
-      val probed = (1 to superProbe).map(p =>
-        branchFor(element_at(ranked, p).getField("sid")))
-      array_min(array(probed: _*)).getField("cid")
+      array_min(array(probedArms(cells, superProbe)(nearestCentroidStruct): _*))
+        .getField("cid")
     }
   }
 
@@ -3297,28 +3289,27 @@ object Similarity {
   // ------------------------- assignment as DATA (the k ≫ 10³ path)
 
   /** Two-level assignment with the LEAF argmin as a broadcast JOIN
-    * instead of a literal CASE chain — centroids as DATA, for the
-    * k-regime where the literal plan cannot be built at all.
+    * instead of an in-plan CASE chain — centroids as DATA, the route
+    * above [[GraphLiteralMaxTerms]].
     *
-    * When to use which (measured, SCALE.md round-11): at k = 1600
-    * (sf10, k ∝ n) the literal [[nearestCentroidTwoLevel]] stays the
-    * faster evaluation — 21 s vs 49 s per full-corpus pass — because
-    * the join pays n·superProbe·√k ROW expansion (each candidate row
-    * materializes through the join and argmin aggregate, dragging the
-    * embedding along) where the literal path evaluates the same kernel
-    * count with zero row growth. The join variant exists for the
-    * regime the literal plan cannot reach: plan SIZE is
-    * O(superProbe·k·dim) literal nodes, and somewhere past
-    * k·dim ≈ 10⁵ terms plan construction/compilation itself becomes
-    * the bottleneck (SemDeDup's 50k clusters × dim 768 is far past
-    * it). Here the plan is O(√k·dim): stage A ranks the ≈√k
-    * super-centroids as literals, stage B explodes the `superProbe`
-    * probed super ids and broadcast-joins the (sid, cid, cvec) member
-    * TABLE — one cosine kernel per candidate row, map-side-combined
-    * `min(struct(d, cid))` argmin, ONE n-row exchange; k never enters
-    * the plan.
+    * When to use which (measured, SCALE.md round-11, when the chain
+    * held literal floats): at k = 1600 (sf10, k ∝ n) the in-plan
+    * [[nearestCentroidTwoLevel]] stayed the faster evaluation — 21 s
+    * vs 49 s per full-corpus pass — because the join pays
+    * n·superProbe·√k ROW expansion (each candidate row materializes
+    * through the join and argmin aggregate, dragging the embedding
+    * along) where the in-plan path evaluates the same kernel count with
+    * zero row growth. The join variant was built for the regime where
+    * the literal plan's O(superProbe·k·dim) nodes made construction
+    * and compilation the bottleneck; the chain's arms are now matrix
+    * expressions, so that regime needs re-measuring. Here stage A
+    * ranks the ≈√k super-centroids in-plan ([[probedSuperIds]]),
+    * stage B explodes the `superProbe` probed super ids and
+    * broadcast-joins the (sid, cid, cvec) member TABLE — one cosine
+    * kernel per candidate row, map-side-combined `min(struct(d, cid))`
+    * argmin, ONE n-row exchange; k never enters the plan.
     *
-    * EXACT agreement with the literal path (spec-pinned): identical
+    * EXACT agreement with the in-plan path (spec-pinned): identical
     * centroid floats flow through the same [[cosine]] kernel, and
     * `min(struct(d, cid))` is the same (d asc, cid asc) argmin
     * `array_min` applies — the aggregation is order-free, so the
@@ -3364,8 +3355,7 @@ object Similarity {
     require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
     val extra = carry.filterNot(_ == "embedding")
     if (cells.size <= superProbe)
-      // probing every cell IS the flat argmin — and at this size the
-      // literal plan sits safely under the codegen cliff
+      // probing every cell IS the flat argmin
       df.withColumn("centroid_id", nearestCentroid(centroids))
         .select(col("vec_id") +: col("embedding") +: col("centroid_id") +:
           extra.map(col): _*)
@@ -3373,14 +3363,9 @@ object Similarity {
       val spark = df.sparkSession
       import spark.implicits._
       val memberDf = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
-        ms.map { case (cid, v) => (si, cid, v) }
+        ms.map { case (cid, v) => (si.toLong, cid, v) }
       }.toDF("sid", "cid", "cvec")
-      val ranked = array_sort(array(cells.zipWithIndex.map { case ((sv, _), si) =>
-        struct((-cosine(col("embedding"), array(sv.map(lit): _*))).as("d"),
-          lit(si).as("sid"))
-      }.toIndexedSeq: _*))
-      val probeSids = array(
-        (1 to superProbe).map(p => element_at(ranked, p).getField("sid")): _*)
+      val probeSids = array(probedSuperIds(cells, superProbe): _*)
       val candidate = struct(
         (-cosine(col("embedding"), col("cvec"))).as("d"), col("cid").as("cid"))
       // the argmin aggregate sees ONLY narrow (vec_id, (d, cid)) rows:
@@ -3404,9 +3389,9 @@ object Similarity {
   /** SemDeDup's own training recipe (Abbas et al. 2023 cluster on a
     * subset/approximately): Lloyd over a DETERMINISTIC hash-addressed
     * sample of ≈ nCentroids·samplePerCell vectors, assigned with the
-    * literal two-level argmin ([[kMeansCentroidsFast]]'s loop — the
+    * in-plan two-level argmin ([[kMeansCentroidsFast]]'s loop — the
     * faster evaluation at practical k; see [[ivfAssignTwoLevelJoin]]
-    * for the k-regime where literals stop being buildable). With
+    * for the join route). With
     * k ∝ n the full-corpus train pass is O(n·√k) per iteration — the
     * measured n^1.5 law (SCALE.md round-11); sampling caps the rows at
     * samplePerCell per cell, so training is O(k·samplePerCell·√k)
@@ -3480,7 +3465,7 @@ object Similarity {
       embeddings: DataFrame,
       index: IvfIndex,
       minCos: Double = SemDedupMinCos): DataFrame =
-    // pinned: the O(n·k·dim) literal-argmin assignment would otherwise
+    // pinned: the O(n·k·dim) argmin assignment would otherwise
     // recompute on BOTH sides of the self-join (measured 2× the whole
     // pairs phase at k=160 on sf1)
     semanticPairsFrom(
@@ -3501,9 +3486,8 @@ object Similarity {
       index: IvfIndex,
       minCos: Double = SemDedupMinCos,
       superK: Int = 0): DataFrame =
-    // AUTO-ROUTE past the literal-plan cliff (r15, the knnGraphHier
-    // recipe): at production cluster counts the two-level CASE chain
-    // exceeds [[GraphLiteralMaxTerms]] plan floats — assign via the
+    // AUTO-ROUTE at [[GraphLiteralMaxTerms]] (r15, the knnGraphHier
+    // recipe): at production cluster counts assign via the
     // spec-pinned bit-equal broadcast-join kernel instead
     if (SuperProbeDefault.toLong * index.centroids.size *
         index.centroids.head._2.length > GraphLiteralMaxTerms)
@@ -3516,10 +3500,9 @@ object Similarity {
 
   /** [[semanticPairsHier]] with the JOIN assignment
     * ([[ivfAssignTwoLevelJoin]]) — bit-identical pairs (the assignment
-    * is spec-pinned equal), with the plan carrying O(√k·dim) literals
-    * instead of O(superProbe·k·dim): the variant for the k-regime
-    * where the literal plan stops being buildable (see
-    * [[ivfAssignTwoLevelJoin]] for the measured trade at practical k).
+    * is spec-pinned equal): the route above [[GraphLiteralMaxTerms]]
+    * (see [[ivfAssignTwoLevelJoin]] for the measured trade at
+    * practical k).
     */
   def semanticPairsHierJoin(
       embeddings: DataFrame,
@@ -3599,7 +3582,7 @@ object Similarity {
     * rule keeps HARD examples (far from the prototype) and prunes the
     * redundant core that SGD learns from any few exemplars.
     *
-    * Scale shape: assignment is the narrow literal-argmin projection
+    * Scale shape: assignment is the narrow argmin projection
     * (zero exchanges); the per-cluster rank windows partition on
     * `centroid_id`, whose cardinality grows ∝ corpus under the
     * SemDeDup k ∝ n law — expected partition size stays constant, so
@@ -3622,10 +3605,10 @@ object Similarity {
 
   /** [[prunePrototypes]] over the TWO-LEVEL assignment — the production
     * path at corpus-scaled nCentroids, where the flat O(n·k·dim)
-    * literal argmin is itself the super-linear term (the SemDeDup hier
+    * argmin is itself the super-linear term (the SemDeDup hier
     * story applied to pruning). The prototypicality score comes from a
-    * broadcast join against the (centroid_id, cvec) table (O(√k·dim)
-    * literals in the assignment plan, k never enters it); rank
+    * broadcast join against the (centroid_id, cvec) table (k never
+    * enters the plan); rank
     * semantics are the shared [[pruneRank]] kernel, identical to the
     * declared key's.
     */

@@ -159,6 +159,75 @@ case class CosineSimDExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Nearest-centroid ranking of an array<float> `embedding` against a
+  * [[CentroidMatrix]] held as data: per centroid `d = -cosine` (at 6 dp
+  * when `rounded`), ordered `(d asc, cid asc)`. `topN = None` gives the
+  * argmin struct `(d, cid)` — `array_min` over one literal struct per
+  * centroid; `Some(n)` gives the `n` best structs ascending —
+  * `slice(array_sort(...), 1, n)`. One node and one static kernel call
+  * ([[VectorOps.nearestCentroid]] / [[VectorOps.nearestCentroids]])
+  * replace `k` cosine kernels over `k·dim` float literals, so the plan,
+  * its strings and the generated code no longer grow with the matrix.
+  */
+case class NearestCentroidExpr(
+    embedding: Expression, matrix: CentroidMatrix, rounded: Boolean, topN: Option[Int])
+    extends UnaryExpression {
+
+  override def child: Expression = embedding
+  override def dataType: DataType =
+    topN.fold[DataType](NearestCentroidExpr.Scored)(_ =>
+      ArrayType(NearestCentroidExpr.Scored, containsNull = false))
+  // the argmin of an empty matrix is null; the array face never is
+  override def nullable: Boolean = topN.isEmpty
+  override def prettyName: String = "graft_nearest_centroid"
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    embedding.dataType match {
+      case ArrayType(FloatType, _) | NullType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName expects an array<float> argument, got ${other.catalogString}")
+    }
+
+  // a null embedding still ranks (every d null, ids break the tie), so
+  // the input's null does not propagate
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = embedding.eval(input).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    topN match {
+      case None => VectorOps.nearestCentroid(v, matrix, rounded)
+      case Some(n) => VectorOps.nearestCentroids(v, matrix, rounded, n)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val m = ctx.addReferenceObj("centroids", matrix, classOf[CentroidMatrix].getName)
+    val e = embedding.genCode(ctx)
+    val call = topN match {
+      case None => s"nearestCentroid(${e.isNull} ? null : ${e.value}, $m, $rounded)"
+      case Some(n) => s"nearestCentroids(${e.isNull} ? null : ${e.value}, $m, $rounded, $n)"
+    }
+    ev.copy(code = code"""
+      |${e.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.VectorOps.$call;
+      |boolean ${ev.isNull} = ${ev.value} == null;
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroidExpr =
+    copy(embedding = newChild)
+}
+
+object NearestCentroidExpr {
+  /** The `(d, cid)` struct the literal forms build per centroid. */
+  val Scored: StructType = StructType(Seq(
+    StructField("d", DoubleType, nullable = true),
+    StructField("cid", LongType, nullable = false)))
+}
+
 /** `ngram_hashes(text)`: sorted distinct 64-bit hashes of word n-grams. */
 case class NGramHashesExpr(child: Expression, n: Int) extends UnaryExpression
     with StringInputCheck {

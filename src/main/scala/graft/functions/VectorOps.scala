@@ -1,11 +1,53 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+
+/** A centroid matrix held as data: `k` ids and one packed row-major
+  * `k×dim` float array — what [[NearestCentroidExpr]] carries instead
+  * of `k·dim` float literals. Equality and hash are by content, so two
+  * plans over the same centroids canonicalize (and reuse exchanges) as
+  * their literal forms did; `toString` is O(1) in `k·dim`, so plan
+  * strings stay short however large the matrix.
+  */
+final class CentroidMatrix(val ids: Array[Long], val values: Array[Float], val dim: Int)
+    extends Serializable {
+  require(values.length == ids.length * dim,
+    s"CentroidMatrix: ${values.length} values for ${ids.length} ids of dim $dim")
+
+  def k: Int = ids.length
+
+  override def equals(o: Any): Boolean = o match {
+    case m: CentroidMatrix => dim == m.dim &&
+      java.util.Arrays.equals(ids, m.ids) && java.util.Arrays.equals(values, m.values)
+    case _ => false
+  }
+
+  override def hashCode: Int =
+    31 * (31 * dim + java.util.Arrays.hashCode(ids)) + java.util.Arrays.hashCode(values)
+
+  override def toString: String = s"centroids[${k}x$dim]"
+}
+
+object CentroidMatrix {
+  def apply(centroids: Seq[(Long, Seq[Float])]): CentroidMatrix = {
+    val dim = centroids.headOption.fold(0)(_._2.length)
+    require(centroids.forall(_._2.length == dim),
+      s"every centroid must have the first one's $dim dimensions; " +
+        "re-train or re-load the index from one embedding table")
+    val values = new Array[Float](centroids.size * dim)
+    centroids.iterator.zipWithIndex.foreach { case ((_, v), j) =>
+      v.copyToArray(values, j * dim)
+    }
+    new CentroidMatrix(centroids.map(_._1).toArray, values, dim)
+  }
+}
 
 /** JVM vector kernels behind the custom expressions ([[CosineSimExpr]],
-  * [[HyperplaneSketchExpr]]): tight loops over float arrays instead of
-  * interpreted zip_with/aggregate chains — the difference between ~µs
-  * and ~ms per pair on 64-dim embeddings.
+  * [[NearestCentroidExpr]], [[HyperplaneSketchExpr]]): tight loops over
+  * float arrays instead of interpreted zip_with/aggregate chains — the
+  * difference between ~µs and ~ms per pair on 64-dim embeddings.
   */
 object VectorOps {
 
@@ -92,6 +134,97 @@ object VectorOps {
       i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  }
+
+  // ------------------------------------------- nearest-centroid ranking
+
+  /** Score of every centroid row against `v`: `d = -cosine(v, row)`,
+    * through [[round6]] when `rounded`. Bit-equal to [[cosine]] over the
+    * row as its own array: the same ascending accumulation, with the
+    * embedding's Σ x² summed once instead of once per row (an
+    * independent sum, so the bits match). A null `v` scores every row
+    * alike, so ids alone order them.
+    */
+  private def centroidScores(v: ArrayData, m: CentroidMatrix, rounded: Boolean): Array[Double] = {
+    val out = new Array[Double](m.k)
+    if (v != null) {
+      val dim = m.dim
+      val c = m.values
+      val n = math.min(v.numElements(), dim)
+      val x = new Array[Double](n)
+      var na = 0.0
+      var i = 0
+      while (i < n) { val xi = v.getFloat(i).toDouble; x(i) = xi; na += xi * xi; i += 1 }
+      var j = 0
+      while (j < m.k) {
+        val base = j * dim
+        var dot = 0.0
+        var nb = 0.0
+        i = 0
+        while (i < n) { val y = c(base + i).toDouble; dot += x(i) * y; nb += y * y; i += 1 }
+        val cos = if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+        out(j) = if (rounded) round6(-cos) else -cos
+        j += 1
+      }
+    }
+    out
+  }
+
+  /** `(d, cid)` ordering of the literal `array_min`/`array_sort` forms:
+    * d by Spark's double ordering (NaN greatest, -0.0 = 0.0), ties on cid.
+    */
+  private def precedes(d1: Double, c1: Long, d2: Double, c2: Long): Boolean = {
+    val cmp = SQLOrderingUtil.compareDoubles(d1, d2)
+    cmp < 0 || (cmp == 0 && c1 < c2)
+  }
+
+  /** Rows of the `n` smallest `(d, cid)`, ascending, by bounded
+    * insertion: O(k·n) compares, for the small probe counts it serves.
+    */
+  private def topRows(d: Array[Double], ids: Array[Long], n: Int): Array[Int] = {
+    val top = new Array[Int](n)
+    var filled = 0
+    var j = 0
+    while (n > 0 && j < d.length) {
+      if (filled < n || precedes(d(j), ids(j), d(top(n - 1)), ids(top(n - 1)))) {
+        var p = if (filled < n) filled else n - 1
+        while (p > 0 && precedes(d(j), ids(j), d(top(p - 1)), ids(top(p - 1)))) {
+          top(p) = top(p - 1)
+          p -= 1
+        }
+        top(p) = j
+        if (filled < n) filled += 1
+      }
+      j += 1
+    }
+    top
+  }
+
+  /** The struct `(d, cid)` of row `j`; `d` is null for a null embedding. */
+  private def scored(v: ArrayData, d: Array[Double], m: CentroidMatrix, j: Int): InternalRow =
+    new GenericInternalRow(Array[Any](if (v == null) null else d(j), m.ids(j)))
+
+  /** The argmin struct `(d, cid)` of `v` over the matrix — the kernel of
+    * [[NearestCentroidExpr]]'s struct face. A null `v` gives the
+    * smallest id with a null `d`; an empty matrix gives null (as
+    * `array_min` of an empty array does).
+    */
+  def nearestCentroid(v: ArrayData, m: CentroidMatrix, rounded: Boolean): InternalRow =
+    if (m.k == 0) null
+    else {
+      val d = centroidScores(v, m, rounded)
+      scored(v, d, m, topRows(d, m.ids, 1)(0))
+    }
+
+  /** The `topN` smallest `(d, cid)` structs of `v` over the matrix in
+    * ascending order — the kernel of [[NearestCentroidExpr]]'s array
+    * face, equal to `slice(array_sort(all k structs), 1, topN)`.
+    */
+  def nearestCentroids(
+      v: ArrayData, m: CentroidMatrix, rounded: Boolean, topN: Int): ArrayData = {
+    val d = centroidScores(v, m, rounded)
+    val top = topRows(d, m.ids, math.max(0, math.min(topN, m.k)))
+    new GenericArrayData(top.map(j => scored(v, d, m, j): Any))
   }
 
   // --------------------------------------------- JL random projection

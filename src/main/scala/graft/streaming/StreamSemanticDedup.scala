@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.ext.Similarity
-import graft.functions.VectorOps
+import graft.functions.{CentroidMatrix, VectorOps}
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions.{col, timestamp_micros}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -47,23 +48,16 @@ object StreamSemanticDedup {
     */
   private def r6(d: Double): Double = VectorOps.round6(d)
 
-  /** The portable argmin of [[Similarity.nearestCentroidPortable]] in
-    * plain JVM: min (−cosine@6dp, cid) — near-ties resolve by cid,
-    * identically to the batch literal expression.
+  /** The portable argmin of [[Similarity.nearestCentroidPortable]]
+    * through the SAME kernel the batch expression calls
+    * ([[VectorOps.nearestCentroid]]): min (−cosine@6dp, cid) under
+    * Spark's double ordering, so NaN scores and near-ties resolve as
+    * the batch plan resolves them.
     */
   private[streaming] def assignPortable(
-      emb: Array[Float], centroids: IndexedSeq[(Long, Array[Float])]): Long = {
-    var bestD = Double.MaxValue
-    var bestCid = Long.MaxValue
-    var i = 0
-    while (i < centroids.length) {
-      val (cid, cvec) = centroids(i)
-      val d = r6(-VectorOps.cosine(emb, cvec))
-      if (d < bestD || (d == bestD && cid < bestCid)) { bestD = d; bestCid = cid }
-      i += 1
-    }
-    bestCid
-  }
+      emb: Array[Float], centroids: CentroidMatrix): Long =
+    VectorOps.nearestCentroid(
+      UnsafeArrayData.fromPrimitiveArray(emb), centroids, rounded = true).getLong(1)
 
   /** Semantic-dup detections (append stream): one tag per vector that
     * has an already-admitted cell-mate with cosine ≥ `minCos`; `dup_of`
@@ -95,8 +89,7 @@ object StreamSemanticDedup {
     require(centroids.nonEmpty, "need a trained/seeded centroid set")
     require(idleTimeout.isEmpty || eventTimeHorizon.isEmpty,
       "choose one of idleTimeout (processing time) / eventTimeHorizon (event time)")
-    val cents: IndexedSeq[(Long, Array[Float])] =
-      centroids.toIndexedSeq.map { case (cid, v) => cid -> v.toArray }
+    val cents = CentroidMatrix(centroids)
     val horizonMs: Long = eventTimeHorizon
       .map(h => scala.concurrent.duration.Duration(h).toMillis).getOrElse(0L)
     val assigned0 = vecs.map { v =>

@@ -273,6 +273,27 @@ class StreamGraphMaintainSpec extends SparkSpec {
       "maintained vector layout must hold the full corpus")
   }
 
+  test("maintainBatch job budget at fixture size: 56 jobs to fold a batch, 3 for its re-delivery") {
+    val (cents, base, b1, _) = tailSplit()
+    val index = Similarity.IvfIndex(cents)
+    val root = java.nio.file.Files.createTempDirectory("graft-gjobs")
+    val vPath = root.resolve("vectors").toString
+    val gPath = root.resolve("graph").toString
+    val baseAssigned = Similarity.ivfAssignPortableTo(base, cents)
+    Similarity.writeClustered(baseAssigned, vPath)
+    Similarity.writeGraphClustered(
+      Similarity.knnGraph(base, k = 4), baseAssigned, gPath)
+    val (cells, foldJobs) = jobsRun(
+      StreamGraphMaintain.maintainBatch(spark, b1, index, vPath, gPath))
+    assert(cells.nonEmpty)
+    val (again, redeliveryJobs) = jobsRun(
+      StreamGraphMaintain.maintainBatch(spark, b1, index, vPath, gPath))
+    assert(again == Nil)
+    // exact pins: a change in either count is a plan change to explain
+    assert(foldJobs == 56, s"fold ran $foldJobs jobs")
+    assert(redeliveryJobs == 3, s"re-delivery ran $redeliveryJobs jobs")
+  }
+
   test("crash between the graph and vector appends: replay converges, no duplicate edges (face 15)") {
     val (cents, base, b1, _) = tailSplit()
     val index = Similarity.IvfIndex(cents)

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.ext.Similarity
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 class StreamSemanticDedupSpec extends SparkSpec {
@@ -51,6 +52,34 @@ class StreamSemanticDedupSpec extends SparkSpec {
         assert(dup == minPartner)
       }
     } finally q.stop()
+  }
+
+  test("stream argmin ≡ batch plan: fixture rows, centroid ties, zero and NaN embeddings") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cents = Similarity.seedCentroids(embs, 16)
+    assert(cents.forall(_._2.exists(_ != 0f)), "the NaN case needs no zero centroid")
+    val fixture = embs.select("embedding").collect().map(_.getSeq[Float](0).toSeq).toSeq
+    val dim = cents.head._2.length
+    val special = Seq(
+      cents(3)._2,                                  // d = -1 at one centroid
+      Seq.fill(dim)(0f),                            // every d = 0: smallest id
+      cents(5)._2.updated(1, Float.NaN))            // every d NaN: smallest id
+    val vecs = fixture ++ special
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = false))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vecs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 3), schema)
+    val batch = df.select(col("vec_id"), Similarity.nearestCentroidPortable(cents),
+      graft.functions.LiteralCentroidForms.argmin(cents, rounded = true).getField("cid"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val matrix = graft.functions.CentroidMatrix(cents)
+    vecs.zipWithIndex.foreach { case (v, i) =>
+      val stream = StreamSemanticDedup.assignPortable(v.toArray, matrix)
+      assert((stream, stream) == batch(i.toLong), s"row $i: stream $stream, batch ${batch(i.toLong)}")
+    }
+    assert(batch((vecs.length - 1).toLong)._1 == cents.map(_._1).min,
+      "a NaN embedding takes the smallest id, as array_min does")
   }
 
   test("event-time horizon: in-horizon duplicate tagged, post-eviction admitted") {
