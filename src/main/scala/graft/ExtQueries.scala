@@ -1427,7 +1427,8 @@ object ExtQueries {
       // kNN-graph construction: the knn_join shape with probes = the
       // CORPUS — every vector's 4 nearest neighbors (self excluded)
       // among its probed cells; both sides shuffle on centroid_id (the
-      // probe side cannot broadcast when it IS the corpus)
+      // join is pinned in Similarity.graphTail: the probe side IS the
+      // corpus)
       Similarity.knnGraph(embs(s, dir), k = KnnGraphK)),
     "knn_graph_refine_embeddings" -> ((s: SparkSession, dir: String) =>
       // one NN-Descent round (Dong et al. 2011): candidates = current

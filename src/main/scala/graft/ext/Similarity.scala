@@ -139,44 +139,25 @@ object Similarity {
     * the flat run, which SemDeDup tolerates by construction (the paper
     * itself uses approximate clustering). The portable flat path —
     * [[kMeansCentroids]] — remains the oracle-checkable variant.
+    * Every k assigns in-plan: each probed arm is one matrix
+    * expression, so the plan does not grow with k·dim (at k = 1600 it
+    * ran 2.3× faster than the retired broadcast member-table join,
+    * SCALE.md "Join twins retired").
     */
   def kMeansCentroidsFast(
       embeddings: DataFrame,
       nCentroids: Int,
       iterations: Int = 3,
       superK: Int = 0): Seq[(Long, Seq[Float])] =
-    // AUTO-ROUTE at [[GraphLiteralMaxTerms]] (r15 — the r14
-    // knnGraphHier recipe applied to the trainer): past that many
-    // superProbe·k·dim terms each Lloyd iteration assigns via the
-    // broadcast-join kernel instead — spec-pinned bit-equal to the
-    // expression assignment, so the switch is purely physical
-    kMeansLoopDf(embeddings, nCentroids, iterations, portable = false,
-      (df, cents) =>
-        if (SuperProbeDefault.toLong * cents.size * cents.head._2.length >
-            GraphLiteralMaxTerms)
-          twoLevelJoinAssigned(df, cents, superK, SuperProbeDefault, carry = Nil)
-        else df.withColumn("centroid_id", nearestCentroidTwoLevel(cents, superK)))
+    kMeansLoop(embeddings, nCentroids, iterations, portable = false,
+      cents => nearestCentroidTwoLevel(cents, superK))
 
   private def kMeansLoop(
       embeddings: DataFrame,
       nCentroids: Int,
       iterations: Int,
       portable: Boolean,
-      assignOf: Seq[(Long, Seq[Float])] => Column): Seq[(Long, Seq[Float])] =
-    kMeansLoopDf(embeddings, nCentroids, iterations, portable,
-      (df, cents) => df.withColumn("centroid_id", assignOf(cents)))
-
-  /** The Lloyd loop over a FRAME-level assigner (r15): the join-based
-    * assignment kernels are DataFrame transforms, not column
-    * expressions, so the loop takes `(frame, centroids) => assigned
-    * frame` — the in-plan paths wrap their Column in [[kMeansLoop]].
-    */
-  private def kMeansLoopDf(
-      embeddings: DataFrame,
-      nCentroids: Int,
-      iterations: Int,
-      portable: Boolean,
-      assignFrame: (DataFrame, Seq[(Long, Seq[Float])]) => DataFrame): Seq[(Long, Seq[Float])] = {
+      assignOf: Seq[(Long, Seq[Float])] => Column): Seq[(Long, Seq[Float])] = {
     val cached = embeddings.select(col("vec_id"), col("embedding")).persist()
     try {
       var centroids = seedCentroids(cached, nCentroids)
@@ -188,7 +169,7 @@ object Similarity {
         // unrolled SQL replica of the SAME Lloyd run lands on
         // bit-identical centroids — the training becomes oracle-checkable
         val meanCol = if (portable) round(avg("v"), 6) else avg("v")
-        val updated = assignFrame(cached, centroids)
+        val updated = cached.withColumn("centroid_id", assignOf(centroids))
           .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
           .groupBy("centroid_id", "pos").agg(meanCol.as("v"))
           .groupBy("centroid_id")
@@ -280,28 +261,21 @@ object Similarity {
       org.apache.spark.sql.GraftBridge.expression(col("embedding")),
       graft.functions.CentroidMatrix(centroids), rounded, topN))
 
-  /** Stage A of every two-level kernel: the ids (indices into `cells`)
-    * of the `superProbe` super-centroids nearest the row's `embedding`,
-    * best first — unrounded `-cosine`, ties on the lower index.
-    */
-  private def probedSuperIds(
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      superProbe: Int): Seq[Column] = {
-    val ranked = rankCentroids(
-      cells.zipWithIndex.map { case ((sv, _), si) => si.toLong -> sv },
-      rounded = false, topN = Some(superProbe))
-    (1 to superProbe).map(p => element_at(ranked, p).getField("cid"))
-  }
-
-  /** Per probed super-cell ([[probedSuperIds]]), `arm` over that cell's
-    * members, picked by a CASE chain over the cells — each chain
-    * evaluates only the arm its super id selects.
+  /** Per probed super-cell, `arm` over that cell's members, picked by
+    * a CASE chain over the cells — each chain evaluates only the arm
+    * its super id selects. Stage A of every two-level kernel ranks the
+    * super ids (indices into `cells`): the `superProbe` super-centroids
+    * nearest the row's `embedding`, best first — unrounded `-cosine`,
+    * ties on the lower index.
     */
   private def probedArms(
       cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
       superProbe: Int)(arm: Seq[(Long, Seq[Float])] => Column): Seq[Column] = {
+    val ranked = rankCentroids(
+      cells.zipWithIndex.map { case ((sv, _), si) => si.toLong -> sv },
+      rounded = false, topN = Some(superProbe))
     val branches = cells.zipWithIndex.map { case ((_, members), si) => si -> arm(members) }
-    probedSuperIds(cells, superProbe).map { sid =>
+    (1 to superProbe).map(p => element_at(ranked, p).getField("cid")).map { sid =>
       branches.tail.foldLeft(when(sid === lit(branches.head._1), branches.head._2)) {
         case (acc, (si, a)) => acc.when(sid === lit(si), a)
       }
@@ -619,25 +593,28 @@ object Similarity {
     graphTail(assigned, probeCells, k)
   }
 
-  /** The shared corpus-probe graph tail (shuffle join on centroid_id —
-    * NO broadcast, the probe side IS the corpus — self exclusion,
-    * per-vertex top-k, total order): ONE body for [[knnGraph]] and
-    * [[knnGraphHier]], so a ranking or tie-break fix can never diverge
-    * them (the file's one-kernel rule; the hier fallback-parity spec
-    * depends on it).
+  /** The shared corpus-probe graph tail (shuffle join on centroid_id,
+    * self exclusion, per-vertex top-k, total order): ONE body for
+    * [[knnGraph]], [[knnGraphHier]] and the append family, so a
+    * ranking or tie-break fix can never diverge them (the file's
+    * one-kernel rule; the hier fallback-parity spec depends on it).
     */
   private def graphTail(
       assigned: DataFrame, probeCells: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("probe_id")
       .orderBy(col("cosine").desc, col("vec_id"))
-    // per-(probe, cell) LOCAL top-k before the per-vertex rank: the
-    // candidate stream leaves the join hash-partitioned by
-    // centroid_id, and this aggregate's keys are a SUPERSET of that
-    // partitioning, so the prune runs inside the join stage with NO
-    // exchange — the rank window then sorts n·nProbe·k rows instead
-    // of the full n·cellsize candidate mass (≈30× at production cell
-    // sizes; the un-pruned window's sort spill is what broke the r15
-    // sf100 rung on one box: 10⁹ candidate rows through one
+    // the join is PINNED to a sort-merge shuffle (the `merge` hint):
+    // both sides hash-partition on centroid_id, and the per-(probe,
+    // cell) LOCAL top-k below keys on a SUPERSET of that partitioning,
+    // so the prune runs inside the join stage with NO exchange. Left
+    // to the planner, one side broadcast at every size measured (400,
+    // 2,000 and 20,000 vectors) and the local window paid an exchange
+    // of its own — 2.5× slower at 20,000 vectors (SCALE.md "Join twins
+    // retired"; PlanShapeSpec pins the shuffle join).
+    // the local prune makes the rank window sort n·nProbe·k rows
+    // instead of the full n·cellsize candidate mass (≈30× at production
+    // cell sizes; the un-pruned window's sort spill is what broke the
+    // r15 sf100 rung on one box: 10⁹ candidate rows through one
     // probe-keyed exchange). EXACT: the global (cosine desc, vec_id)
     // top-k restricted to one cell preserves rank, so it is contained
     // in the union of per-cell top-ks under the same total order, and
@@ -653,7 +630,7 @@ object Similarity {
       .partitionBy("probe_id", "centroid_id")
       .orderBy(col("cosine").desc, col("vec_id"))
     assigned
-      .join(probeCells, Seq("centroid_id"))
+      .join(probeCells.hint("merge"), Seq("centroid_id"))
       .filter(col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("centroid_id"), col("vec_id"), col("label"),
         round(cosine(col("_pe"), col("embedding")), 6).as("cosine"))
@@ -669,31 +646,18 @@ object Similarity {
   /** [[knnGraph]] with BOTH sides two-level — the production variant
     * at corpus-scaled nCentroids, where the flat argmin's
     * O(n·k·dim) assignment dominates (measured 18.5×/decade at k ∝ n,
-    * SCALE.md r13 — the same law D4's flat path hit): assignment via
-    * [[nearestCentroidTwoLevel]], probe lists via the two-level
-    * cell ranking below. Edge semantics within a probed cell are
-    * identical (same 6-dp cosine, same rank tie-breaks); only the
-    * probed CELL SETS differ by the coarse-quantizer approximation —
-    * the [[semanticPairsHier]] caveat, and the declared oracle-checked
-    * key stays on the flat portable path. With few enough super-cells
-    * (≤ superProbe) both stages fall back to the flat ranking, so the
-    * hier variant degrades to [[knnGraph]] EXACTLY (spec-pinned).
+    * SCALE.md r13 — the same law D4's flat path hit): assignment and
+    * probe lists via [[hierGraphKernels]], in-plan at every nc (each
+    * per-row stage is one matrix expression per probed arm, so the
+    * plan does not grow with nc·dim). Edge semantics within a probed
+    * cell are identical (same 6-dp cosine, same rank tie-breaks); only
+    * the probed CELL SETS differ by the coarse-quantizer
+    * approximation — the [[semanticPairsHier]] caveat, and the
+    * declared oracle-checked key stays on the flat portable path. With
+    * few enough super-cells (≤ superProbe) both stages fall back to
+    * the flat ranking, so the hier variant degrades to [[knnGraph]]
+    * EXACTLY (spec-pinned).
     */
-  /** Route threshold of the two-level kernels, in superProbe·nCentroids·dim
-    * terms: above it [[knnGraphHier]], [[kMeansCentroidsFast]],
-    * [[semanticPairsHier]] and the append family take the broadcast-join
-    * twins ([[knnGraphHierJoin]] etc.), spec-pinned bit-identical, so the
-    * switch is purely physical. The value was measured while each term
-    * was a float LITERAL in the CASE chains (nc=640/dim=64/superProbe=2,
-    * ~82k terms: 19.6 s literal vs 1.26 s as data, SCALE.md r14 —
-    * compilation dominated). The chains now hold one
-    * [[graft.functions.NearestCentroidExpr]] per arm, whose matrix is
-    * data, so that cliff is gone; where the in-plan path now stops
-    * winning is unmeasured, and the threshold stays until an sf1/sf10
-    * A/B moves it.
-    */
-  val GraphLiteralMaxTerms: Long = 50000L
-
   def knnGraphHier(
       embeddings: DataFrame,
       k: Int = 4,
@@ -701,41 +665,37 @@ object Similarity {
       nProbe: Int = 4,
       superK: Int = 0,
       superProbe: Int = SuperProbeDefault): DataFrame = {
-    val cents = seedCentroids(embeddings, nCentroids)
-    // fallback parity: when every super-cell is probed the hier path
-    // must equal [[knnGraph]] BIT-FOR-BIT, so the degraded assignment
-    // is the same PORTABLE flat argmin the flat graph uses (the
-    // two-level argmin's own fallback is the unrounded flat argmin,
-    // which can split 6-dp ties differently)
-    val k0 = if (superK > 0) superK
-      else math.max(1, math.round(math.sqrt(cents.size.toDouble)).toInt)
-    // the super-cell partition is computed ONCE and passed to both the
-    // fallback check and the probe lists (r13 review: three separate
-    // superCells runs per graph build — a k-point driver Lloyd each —
-    // added up at production nCentroids); the assignment expression
-    // recomputes internally behind nearestCentroidTwoLevel's fixed API,
-    // the one remaining duplicate run
-    val cells = superCells(cents, k0)
-    // route at [[GraphLiteralMaxTerms]]: past ~superProbe·k·dim terms
-    // the probe lists and assignment run as broadcast joins
-    // (bit-identical result; measured 15.5× at nc=640 when the CASE
-    // chains held literal floats). The collected cents/cells ride
-    // along — the route never re-runs the seed collect or the driver
-    // Lloyd (r14 review)
-    if (cents.nonEmpty &&
-        superProbe.toLong * cents.size * cents.head._2.length > GraphLiteralMaxTerms)
-      return knnGraphHierJoinWith(embeddings, cents, cells, k, nProbe, superProbe)
-    val assignExpr =
-      if (cells.size <= superProbe) nearestCentroidPortable(cents)
-      else nearestCentroidTwoLevel(cents, superK, superProbe)
+    val (assign, probedCells) = hierGraphKernels(
+      seedCentroids(embeddings, nCentroids), superK, nProbe, superProbe)
     val assigned = embeddings
-      .withColumn("centroid_id", assignExpr)
+      .withColumn("centroid_id", assign)
       .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label"))
     val probeCells = embeddings.select(
       col("vec_id").as("probe_id"), col("embedding").as("_pe"),
-      explode(probeCellsTwoLevel(cents, cells, nProbe, superProbe))
-        .as("centroid_id"))
+      explode(probedCells).as("centroid_id"))
     graphTail(assigned, probeCells, k)
+  }
+
+  /** The two per-row kernels of [[knnGraphHier]] — the assignment
+    * (centroid id) and the probed cell ids (array) over `embedding` —
+    * from ONE [[superCells]] partition, so a graph build or an append
+    * runs the k-point super-cell Lloyd once. Fallback parity: when every
+    * super-cell is probed the hier graph must equal [[knnGraph]]
+    * BIT-FOR-BIT, so the degraded assignment is the same PORTABLE flat
+    * argmin the flat graph uses (the two-level argmin's own fallback
+    * is the unrounded flat argmin, which can split 6-dp ties
+    * differently).
+    */
+  private def hierGraphKernels(
+      centroids: Seq[(Long, Seq[Float])],
+      superK: Int,
+      nProbe: Int,
+      superProbe: Int): (Column, Column) = {
+    val cells = superCells(centroids, superK)
+    val assign =
+      if (cells.size <= superProbe) nearestCentroidPortable(centroids)
+      else twoLevelArgmin(centroids, cells, superProbe)
+    (assign, probeCellsTwoLevel(centroids, cells, nProbe, superProbe))
   }
 
   /** The two-level analogue of [[probeCellsOf]]'s per-row cell
@@ -761,127 +721,6 @@ object Similarity {
         rankCentroids(_, rounded = true, topN = Some(nProbe))): _*)
       transform(slice(array_sort(union), 1, nProbe), x => x.getField("cid"))
     }
-  }
-
-  /** [[probeCellsTwoLevel]] with the member-cell ranking as a broadcast
-    * JOIN — probe lists as DATA, the route above [[GraphLiteralMaxTerms]]
-    * (SCALE.md r13 measured the literal CASE chains' cliff: past
-    * k·dim ≈ 10⁵ literal terms plan construction/compilation dominated
-    * — nc=640 hier 40.2 s, WORSE than nc=160). The
-    * [[ivfAssignTwoLevelJoin]] join-shape applied to the probe side:
-    *
-    *  - stage A ranks the ≈√k super-centroids in-plan
-    *    ([[probedSuperIds]], one matrix expression);
-    *  - stage B explodes the `superProbe` probed super ids and
-    *    broadcast-joins the (sid, cid, cvec) member TABLE — one 6-dp
-    *    cosine kernel per candidate row, the same rounded score
-    *    [[probeCellsTwoLevel]]'s arms compute in-plan;
-    *  - stage C takes the `nProbe` best (d, cid) per probe with a
-    *    sort-sliced collect_list — the aggregate analogue of the
-    *    in-plan path's array_sort + slice. Cells are disjoint, so the
-    *    (d, cid) pairs are unique and array_sort erases the collect
-    *    order: the probed cell list is BIT-IDENTICAL to the in-plan
-    *    path's however tasks interleave (spec-pinned).
-    *
-    * Cost shape: n·superProbe·√k candidate rows through ONE
-    * probe-keyed exchange (map-side-combinable collect_list bounded by
-    * superProbe·(k/√k) entries per probe); k never enters the plan.
-    */
-  private def probeCellsTwoLevelJoin(
-      probes: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      nProbe: Int,
-      superProbe: Int): DataFrame = {
-    require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    if (cells.size <= superProbe)
-      // probing every super IS the flat ranking — the same fallback
-      // as the in-plan path
-      probeCellsOf(probes, centroids, nProbe)
-    else {
-      val spark = probes.sparkSession
-      import spark.implicits._
-      val memberDf = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
-        ms.map { case (cid, v) => (si.toLong, cid, v) }
-      }.toDF("sid", "cid", "cvec")
-      val probeSids = array(probedSuperIds(cells, superProbe): _*)
-      // the aggregate sees ONLY narrow (probe_id, (d, cid)) rows — the
-      // probe embedding is scored map-side in the broadcast-join stage
-      // and re-attached by an id-keyed join AFTER the per-probe slice:
-      // carrying `_pe` through the agg made ObjectHashAggregate's sort
-      // fallback sort n·superProbe·members WIDE rows (the r15 sf100
-      // rung's disk blow-up; narrow structs spill 20× smaller)
-      probes
-        .select(col("probe_id"), col("embedding").as("_pe"),
-          explode(probeSids).as("sid"))
-        .join(broadcast(memberDf), Seq("sid"))
-        .select(col("probe_id"),
-          struct(round(-cosine(col("_pe"), col("cvec")), 6).as("d"),
-            col("cid").as("cid")).as("_dc"))
-        .groupBy("probe_id")
-        .agg(slice(array_sort(collect_list(col("_dc"))), 1, nProbe)
-          .as("_cells"))
-        .join(probes.select(col("probe_id"), col("embedding").as("_pe")),
-          Seq("probe_id"))
-        .select(col("probe_id"), col("_pe"),
-          explode(transform(col("_cells"), x => x.getField("cid")))
-            .as("centroid_id"))
-    }
-  }
-
-  /** [[knnGraphHier]] with BOTH per-row stages as broadcast joins —
-    * centroids AND probe lists as DATA ([[ivfAssignTwoLevelJoin]] for
-    * the assignment, [[probeCellsTwoLevelJoin]] for the probe lists) —
-    * the graph-build route above [[GraphLiteralMaxTerms]] (SCALE.md
-    * r13; r13 verdict #2). Probed cell sets and assignments are
-    * BIT-IDENTICAL to [[knnGraphHier]]'s in-plan two-level path
-    * (spec-pinned), and the shared [[graphTail]] keeps edge semantics
-    * one kernel; with few enough super-cells (≤ superProbe) both
-    * stages fall back to the same flat path as [[knnGraphHier]], so
-    * the join variant degrades to [[knnGraph]] exactly.
-    */
-  def knnGraphHierJoin(
-      embeddings: DataFrame,
-      k: Int = 4,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      superK: Int = 0,
-      superProbe: Int = SuperProbeDefault): DataFrame = {
-    val cents = seedCentroids(embeddings, nCentroids)
-    val k0 = if (superK > 0) superK
-      else math.max(1, math.round(math.sqrt(cents.size.toDouble)).toInt)
-    knnGraphHierJoinWith(embeddings, cents, superCells(cents, k0),
-      k, nProbe, superProbe)
-  }
-
-  /** [[knnGraphHierJoin]] over PRECOMPUTED centroids + super-cells:
-    * the auto-routing [[knnGraphHier]] has already collected both, and
-    * the assignment stage shares them too — one seed collect and one
-    * driver Lloyd per graph build, never per stage (r14 review
-    * finding; the same de-duplication the r13 fix made inside the
-    * in-plan path).
-    */
-  private def knnGraphHierJoinWith(
-      embeddings: DataFrame,
-      cents: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      k: Int,
-      nProbe: Int,
-      superProbe: Int): DataFrame = {
-    val assigned =
-      if (cells.size <= superProbe)
-        // [[knnGraphHier]]'s fallback is the PORTABLE flat argmin (the
-        // bit-parity contract with [[knnGraph]]); mirror it exactly
-        embeddings.withColumn("centroid_id", nearestCentroidPortable(cents))
-          .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label"))
-      else
-        twoLevelJoinAssignedWith(embeddings, cents, cells, superProbe,
-          carry = Seq("label"))
-          .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label"))
-    val probeCells = probeCellsTwoLevelJoin(
-      embeddings.select(col("vec_id").as("probe_id"), col("embedding")),
-      cents, cells, nProbe, superProbe)
-    graphTail(assigned, probeCells, k)
   }
 
   /** One round of LABEL PROPAGATION over the [[knnGraph]] edge table —
@@ -1177,38 +1016,42 @@ object Similarity {
       newcomerEdges: DataFrame, // the batch vertices' own edges
       batchAssigned: DataFrame) // (centroid_id, vec_id, embedding, label)
 
+  /** The route threshold of the append family, in
+    * superProbe·nCentroids·dim terms, read by [[appendKernels]] alone:
+    * at or under it a layout is assigned and probed with the PORTABLE
+    * flat kernels, above it with [[knnGraphHier]]'s two-level kernels.
+    * It fixes which assignment a stored layout is written with
+    * ([[writeHnswClustered]]) and so which one its appends maintain.
+    * The name is historical: the value once bounded the float literals
+    * a centroid CASE chain could hold before compilation dominated
+    * (SCALE.md r14); the centroids are one packed matrix now.
+    */
+  val GraphLiteralMaxTerms: Long = 50000L
+
   /** The assignment + probe-cell kernels the append family runs,
-    * ROUTED at [[GraphLiteralMaxTerms]] exactly like the graph
-    * builders (r17 — the production-nc append): under it, the
-    * PORTABLE flat kernels the declared keys freeze (oracle-checkable
-    * 6-dp argmin); above it,
-    * the two-level broadcast-join kernels over the same FROZEN
-    * centroid matrix ([[twoLevelJoinAssignedWith]] /
-    * [[probeCellsTwoLevelJoin]], super-cells derived deterministically
-    * from the centroids alone) — both are per-row deterministic
-    * functions of (embedding, centroid matrix), so append ≡ rebuild
-    * still holds, now against [[knnGraphHierJoin]] at the same nc: the
-    * production build path whose layouts a production append
-    * maintains (spec-pinned).
+    * picked by [[GraphLiteralMaxTerms]]: at or under it, the PORTABLE
+    * flat kernels the declared keys freeze (oracle-checkable 6-dp
+    * argmin); above it, [[knnGraphHier]]'s two-level kernels
+    * ([[hierGraphKernels]]) over the same FROZEN centroid matrix,
+    * super-cells derived deterministically from the centroids alone.
+    * Both are per-row deterministic functions of (embedding, centroid
+    * matrix), so append ≡ rebuild holds — against [[knnGraph]] under
+    * the threshold and [[knnGraphHier]] at the same nc above it
+    * (spec-pinned).
     */
   private def appendKernels(
       centroids: Seq[(Long, Seq[Float])],
       nProbe: Int): (DataFrame => DataFrame, DataFrame => DataFrame) = {
     val dim = centroids.headOption.map(_._2.length).getOrElse(0)
-    if (centroids.isEmpty ||
-        SuperProbeDefault.toLong * centroids.size * dim <= GraphLiteralMaxTerms)
-      (df => ivfAssignPortableTo(df, centroids)
-         .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
-       df => probeCellsOf(df, centroids, nProbe))
-    else {
-      val k0 = math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt)
-      val cells = superCells(centroids, k0)
-      (df => twoLevelJoinAssignedWith(df, centroids, cells, SuperProbeDefault,
-           carry = Seq("label"))
-         .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
-       df => probeCellsTwoLevelJoin(df, centroids, cells, nProbe,
-         SuperProbeDefault))
-    }
+    val (assign, probedCells) =
+      if (centroids.isEmpty ||
+          SuperProbeDefault.toLong * centroids.size * dim <= GraphLiteralMaxTerms)
+        (nearestCentroidPortable(centroids), probedCellIds(centroids, nProbe))
+      else hierGraphKernels(centroids, superK = 0, nProbe, SuperProbeDefault)
+    (df => df.withColumn("centroid_id", assign)
+       .select(col("centroid_id"), col("vec_id"), col("embedding"), col("label")),
+     df => df.select(col("probe_id"), col("embedding").as("_pe"),
+       explode(probedCells).as("centroid_id")))
   }
 
   private def appendEdgePieces(
@@ -1898,6 +1741,13 @@ object Similarity {
     * Malkov & Yashunin's insertion heuristic exists to prevent,
     * re-created here deterministically. The BASE layer stays pure
     * kNN: its entries arrive already in-neighborhood from layer 1.
+    *
+    * Per-layer builder: the declared key keeps the oracle-checkable
+    * flat [[knnGraph]] at nc=16. At corpus scale pass `nCentroidsOf =
+    * Some(n => n/cellSize)` (the SemDeDup nc ∝ corpus law — fixed nc
+    * makes the flat kernel's candidate mass quadratic per decade) and
+    * `hier = true`, which builds every layer with the two-level
+    * [[knnGraphHier]] (SCALE.md r15).
     */
   def hnswLayerGraphs(
       embeddings: DataFrame,
@@ -1908,16 +1758,9 @@ object Similarity {
       hier: Boolean = false): Seq[DataFrame] = {
     require(levels >= 1, s"levels must be >= 1: $levels")
     require(ratio >= 2, s"ratio must be >= 2: $ratio")
-    // the per-layer graph builder: the declared key keeps the
-    // oracle-checkable flat kernel at nc=16; at corpus scale pass
-    // `nCentroidsOf = Some(n => n/cellSize)` (the SemDeDup nc ∝ corpus
-    // law — fixed nc makes the flat kernel's candidate mass quadratic
-    // per decade) and `hier = true` to route through the two-level
-    // join kernel above [[GraphLiteralMaxTerms]], exactly as knn-graph
-    // builds do (SCALE.md r15)
     def build(sub: DataFrame): DataFrame = {
       val nc = nCentroidsOf.map(f => f(sub.count())).getOrElse(16)
-      if (hier) knnGraphHierJoin(sub, k, nc) else knnGraph(sub, k, nc)
+      if (hier) knnGraphHier(sub, k, nc) else knnGraph(sub, k, nc)
     }
     build(embeddings) +: (1 to levels).map { l =>
       val sub = embeddings.filter(hnswLayerPredicate(l, ratio))
@@ -2065,6 +1908,15 @@ object Similarity {
     * they maintain differently (exact re-rank vs append-only) — the
     * read face re-unions them, and the layer-parity spec pins the
     * round trip bit-identical to [[hnswLayerGraphs]].
+    *
+    * Production nc (r17): `nCentroids` sets the base layout's cell
+    * count and `nCentroidsOf` the per-layer build/layout nc ∝ layer
+    * size; `hier = true` builds each layer's graph with
+    * [[knnGraphHier]]. Every layout is assigned by [[appendKernels]]
+    * (two-level above [[GraphLiteralMaxTerms]]), so the appends
+    * maintain the assignment the layout was written with. The landmark
+    * STAR stays at 16 seeds regardless (≤16 extra edges per vertex is
+    * the hierarchy's design constant, not a layout knob).
     */
   def writeHnswClustered(
       spark: SparkSession,
@@ -2083,19 +1935,12 @@ object Similarity {
     // small upper-layer jobs fill the scheduler gaps of the base build
     // (on a cluster: independent stages over one immutable input; the
     // write wall-clock is max(layer), not sum).
-    //
-    // PRODUCTION nc (r17): `nCentroids` sets the base layout's cell
-    // count and `nCentroidsOf` the per-layer build/layout nc ∝ layer
-    // size — at nc above [[GraphLiteralMaxTerms]] every assignment routes
-    // through the two-level join kernels ([[appendKernels]]), and the
-    // landmark STAR stays at 16 seeds regardless (≤16 extra edges per
-    // vertex is the hierarchy's design constant, not a layout knob).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val baseF = Future {
       val nc0 = nCentroidsOf.map(f => f(embeddings.count()))
         .getOrElse(nCentroids)
-      val g = if (hier) knnGraphHierJoin(embeddings, k, nc0)
+      val g = if (hier) knnGraphHier(embeddings, k, nc0)
         else knnGraph(embeddings, k, nc0)
       val cents = seedCentroids(embeddings, nCentroids)
       writeGraphClustered(g,
@@ -2112,7 +1957,7 @@ object Similarity {
             "vertices - the corpus is too small for this hierarchy; " +
             "lower `levels`")
         val nc = nCentroidsOf.map(f => f(mc.getLong(1))).getOrElse(16)
-        val g = if (hier) knnGraphHierJoin(sub, k, nc)
+        val g = if (hier) knnGraphHier(sub, k, nc)
           else knnGraph(sub, k, nc)
         val starCents = seedCentroids(sub, 16)
         val layoutCents =
@@ -3168,15 +3013,18 @@ object Similarity {
     * ~130 KB and microseconds of work). Returns only NON-empty supers:
     * (super-centroid vector, member centroids). Deterministic: seeds are
     * the first `superK` centroids by centroid_id, ties in the argmin
-    * break toward the lower super index.
+    * break toward the lower super index. `superK = 0` → ≈√k.
     */
   private[ext] def superCells(
       centroids: Seq[(Long, Seq[Float])],
       superK: Int,
       iterations: Int = 4): Seq[(Seq[Float], Seq[(Long, Seq[Float])])] = {
-    require(superK >= 1, s"superK must be >= 1: $superK")
+    require(superK >= 0, s"superK must be >= 0: $superK")
     val cents = centroids.sortBy(_._1).toIndexedSeq
-    val k = math.min(superK, cents.size)
+    val k = math.min(
+      if (superK > 0) superK
+      else math.max(1, math.round(math.sqrt(cents.size.toDouble)).toInt),
+      cents.size)
     val dim = cents.head._2.length
     var sup: IndexedSeq[Array[Double]] =
       cents.take(k).map(_._2.map(_.toDouble).toArray)
@@ -3253,10 +3101,18 @@ object Similarity {
   def nearestCentroidTwoLevel(
       centroids: Seq[(Long, Seq[Float])],
       superK: Int = 0,
-      superProbe: Int = SuperProbeDefault): Column = {
+      superProbe: Int = SuperProbeDefault): Column =
+    twoLevelArgmin(centroids, superCells(centroids, superK), superProbe)
+
+  /** [[nearestCentroidTwoLevel]] over a PRECOMPUTED super-cell
+    * partition — so [[hierGraphKernels]], which shares one partition
+    * with its probe lists, never runs the k-point super-cell Lloyd twice.
+    */
+  private def twoLevelArgmin(
+      centroids: Seq[(Long, Seq[Float])],
+      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
+      superProbe: Int): Column = {
     require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    val k0 = if (superK > 0) superK else math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt)
-    val cells = superCells(centroids, k0)
     // probing every cell IS the flat argmin — skip the detour
     if (cells.size <= superProbe) nearestCentroid(centroids)
     else {
@@ -3286,112 +3142,10 @@ object Similarity {
       superK: Int = 0): IvfIndex =
     IvfIndex(kMeansCentroidsFast(embeddings, nCentroids, iterations, superK))
 
-  // ------------------------- assignment as DATA (the k ≫ 10³ path)
-
-  /** Two-level assignment with the LEAF argmin as a broadcast JOIN
-    * instead of an in-plan CASE chain — centroids as DATA, the route
-    * above [[GraphLiteralMaxTerms]].
-    *
-    * When to use which (measured, SCALE.md round-11, when the chain
-    * held literal floats): at k = 1600 (sf10, k ∝ n) the in-plan
-    * [[nearestCentroidTwoLevel]] stayed the faster evaluation — 21 s
-    * vs 49 s per full-corpus pass — because the join pays
-    * n·superProbe·√k ROW expansion (each candidate row materializes
-    * through the join and argmin aggregate, dragging the embedding
-    * along) where the in-plan path evaluates the same kernel count with
-    * zero row growth. The join variant was built for the regime where
-    * the literal plan's O(superProbe·k·dim) nodes made construction
-    * and compilation the bottleneck; the chain's arms are now matrix
-    * expressions, so that regime needs re-measuring. Here stage A
-    * ranks the ≈√k super-centroids in-plan ([[probedSuperIds]]),
-    * stage B explodes the `superProbe` probed super ids and
-    * broadcast-joins the (sid, cid, cvec) member TABLE — one cosine
-    * kernel per candidate row, map-side-combined `min(struct(d, cid))`
-    * argmin, ONE n-row exchange; k never enters the plan.
-    *
-    * EXACT agreement with the in-plan path (spec-pinned): identical
-    * centroid floats flow through the same [[cosine]] kernel, and
-    * `min(struct(d, cid))` is the same (d asc, cid asc) argmin
-    * `array_min` applies — the aggregation is order-free, so the
-    * assignment is bit-stable however tasks interleave.
-    */
-  def ivfAssignTwoLevelJoin(
-      embeddings: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      superK: Int = 0,
-      superProbe: Int = SuperProbeDefault): DataFrame =
-    twoLevelJoinAssigned(embeddings, centroids, superK, superProbe,
-      carry = Seq("label"))
-      .select("vec_id", "embedding", "label", "centroid_id")
-
-  /** Shared join-assignment kernel: `df` must carry `vec_id` and
-    * `embedding`; `carry` lists further columns to pass through the
-    * per-vector argmin aggregate (constant within a vec_id group).
-    */
-  private def twoLevelJoinAssigned(
-      df: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      superK: Int,
-      superProbe: Int,
-      carry: Seq[String]): DataFrame = {
-    val k0 =
-      if (superK > 0) superK
-      else math.max(1, math.round(math.sqrt(centroids.size.toDouble)).toInt)
-    twoLevelJoinAssignedWith(df, centroids, superCells(centroids, k0),
-      superProbe, carry)
-  }
-
-  /** [[twoLevelJoinAssigned]] over a PRECOMPUTED super-cell partition —
-    * so a caller that already ran [[superCells]] (the graph builders
-    * share it with the probe lists) never pays the k-point driver
-    * Lloyd twice (r14 review finding).
-    */
-  private def twoLevelJoinAssignedWith(
-      df: DataFrame,
-      centroids: Seq[(Long, Seq[Float])],
-      cells: Seq[(Seq[Float], Seq[(Long, Seq[Float])])],
-      superProbe: Int,
-      carry: Seq[String]): DataFrame = {
-    require(superProbe >= 1, s"superProbe must be >= 1: $superProbe")
-    val extra = carry.filterNot(_ == "embedding")
-    if (cells.size <= superProbe)
-      // probing every cell IS the flat argmin
-      df.withColumn("centroid_id", nearestCentroid(centroids))
-        .select(col("vec_id") +: col("embedding") +: col("centroid_id") +:
-          extra.map(col): _*)
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val memberDf = cells.zipWithIndex.flatMap { case ((_, ms), si) =>
-        ms.map { case (cid, v) => (si.toLong, cid, v) }
-      }.toDF("sid", "cid", "cvec")
-      val probeSids = array(probedSuperIds(cells, superProbe): _*)
-      val candidate = struct(
-        (-cosine(col("embedding"), col("cvec"))).as("d"), col("cid").as("cid"))
-      // the argmin aggregate sees ONLY narrow (vec_id, (d, cid)) rows:
-      // the embedding is consumed map-side by the candidate kernel and
-      // re-attached with an id-keyed join after — first(embedding) in
-      // the agg buffer pushed the whole candidate expansion (embedding
-      // per row) through ObjectHashAggregate's sort fallback (the r15
-      // sf100 rung's disk blow-up)
-      df.select(col("vec_id"), col("embedding"), explode(probeSids).as("sid"))
-        .join(broadcast(memberDf), Seq("sid"))
-        .select(col("vec_id"), candidate.as("_c"))
-        .groupBy("vec_id")
-        .agg(min(col("_c")).as("_s"))
-        .join(df.select(col("vec_id") +: col("embedding") +:
-          extra.map(col): _*), Seq("vec_id"))
-        .select(col("vec_id") +: col("embedding") +:
-          col("_s").getField("cid").as("centroid_id") +: extra.map(col): _*)
-    }
-  }
-
   /** SemDeDup's own training recipe (Abbas et al. 2023 cluster on a
     * subset/approximately): Lloyd over a DETERMINISTIC hash-addressed
     * sample of ≈ nCentroids·samplePerCell vectors, assigned with the
-    * in-plan two-level argmin ([[kMeansCentroidsFast]]'s loop — the
-    * faster evaluation at practical k; see [[ivfAssignTwoLevelJoin]]
-    * for the join route). With
+    * in-plan two-level argmin ([[kMeansCentroidsFast]]'s loop). With
     * k ∝ n the full-corpus train pass is O(n·√k) per iteration — the
     * measured n^1.5 law (SCALE.md round-11); sampling caps the rows at
     * samplePerCell per cell, so training is O(k·samplePerCell·√k)
@@ -3479,40 +3233,18 @@ object Similarity {
     * would dominate the whole operator (SCALE.md r9 measured it at
     * k=512). Pair semantics within a cell are identical (same 6-dp
     * cosine, same keep-lowest-id ordering); only the cell boundaries
-    * differ by the coarse-quantizer approximation.
+    * differ by the coarse-quantizer approximation. The assignment is
+    * [[ivfAssignTwoLevelTo]] at every cluster count — in-plan, one
+    * matrix expression per probed arm.
     */
   def semanticPairsHier(
       embeddings: DataFrame,
       index: IvfIndex,
       minCos: Double = SemDedupMinCos,
       superK: Int = 0): DataFrame =
-    // AUTO-ROUTE at [[GraphLiteralMaxTerms]] (r15, the knnGraphHier
-    // recipe): at production cluster counts assign via the
-    // spec-pinned bit-equal broadcast-join kernel instead
-    if (SuperProbeDefault.toLong * index.centroids.size *
-        index.centroids.head._2.length > GraphLiteralMaxTerms)
-      semanticPairsHierJoin(embeddings, index, minCos, superK)
-    else semanticPairsFrom(
-      graft.core.CacheScope.persist(
-        ivfAssignTwoLevelTo(embeddings, index.centroids, superK)
-          .select(col("centroid_id"), col("vec_id"), col("embedding"))),
-      minCos)
-
-  /** [[semanticPairsHier]] with the JOIN assignment
-    * ([[ivfAssignTwoLevelJoin]]) — bit-identical pairs (the assignment
-    * is spec-pinned equal): the route above [[GraphLiteralMaxTerms]]
-    * (see [[ivfAssignTwoLevelJoin]] for the measured trade at
-    * practical k).
-    */
-  def semanticPairsHierJoin(
-      embeddings: DataFrame,
-      index: IvfIndex,
-      minCos: Double = SemDedupMinCos,
-      superK: Int = 0): DataFrame =
     semanticPairsFrom(
       graft.core.CacheScope.persist(
-        twoLevelJoinAssigned(embeddings, index.centroids, superK,
-          SuperProbeDefault, carry = Seq.empty)
+        ivfAssignTwoLevelTo(embeddings, index.centroids, superK)
           .select(col("centroid_id"), col("vec_id"), col("embedding"))),
       minCos)
 

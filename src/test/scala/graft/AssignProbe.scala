@@ -1,22 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
 
-/** Scale probe (Test/runMain graft.AssignProbe <sfDir> <k> [mode...]):
-  * times ONE full-corpus nearest-centroid assignment at a given k —
-  * the evidence behind SCALE.md's round-11 assignment-as-data entry
-  * (the negative result: the literal CASE chain beats the broadcast
-  * join 2.3× at k=1600; the join variant is for the k-regime where
-  * the literal plan stops being buildable).
-  * Modes: twolevel (literal CASE chain), join (broadcast member table).
+/** Scale probe (Test/runMain graft.AssignProbe <sfDir> <k>): times ONE
+  * full-corpus two-level nearest-centroid assignment
+  * ([[Similarity.ivfAssignTwoLevelTo]]) at a given k —
+  * the evidence behind SCALE.md's two-level assignment entries (round
+  * 11, and "Join twins retired": the in-plan two-level argmin ran 2.3×
+  * faster than the retired broadcast member-table join at k=1600).
   */
 object AssignProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/testdata/sf1")
     val k = if (args.length > 1) args(1).toInt else 160
-    val modes = if (args.length > 2) args.drop(2).toSeq else Seq("twolevel")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
@@ -26,20 +25,21 @@ object AssignProbe {
     e.count()
     val cents = Similarity.seedCentroids(e, k)
       .zipWithIndex.map { case ((_, v), i) => i.toLong -> v }
-    for (mode <- modes; run <- 1 to 3) {
-      val assigned = mode match {
-        case "twolevel" => Similarity.ivfAssignTwoLevelTo(e, cents)
-        case "join"     => Similarity.ivfAssignTwoLevelJoin(e, cents)
-        case other      => sys.error(s"unknown mode: $other")
-      }
+    for (run <- 1 to 3) {
+      val assigned = Similarity.ivfAssignTwoLevelTo(e, cents)
       if (run == 1) {
         val plan = assigned.queryExecution.executedPlan.toString
         val wscg = plan.contains("WholeStageCodegen")
-        println(s"ASSIGNPROBE $mode k=$k wholestage=$wscg planLines=${plan.linesIterator.size}")
+        println(s"ASSIGNPROBE twolevel k=$k wholestage=$wscg planLines=${plan.linesIterator.size}")
       }
+      // populated cells + an order-free result hash (sum of per-row
+      // xxhash64 of (vec_id, centroid_id)): equal hashes, equal assignment
       val t0 = System.nanoTime()
-      val n = assigned.groupBy("centroid_id").count().count()
-      println(f"ASSIGNPROBE $mode k=$k run$run ${(System.nanoTime() - t0) / 1e9}%.3f s cells=$n")
+      val r = assigned.groupBy("centroid_id")
+        .agg(sum(xxhash64(col("vec_id"), col("centroid_id")).cast("decimal(38,0)")).as("h"))
+        .agg(count(lit(1)), sum(col("h"))).collect()(0)
+      println(f"ASSIGNPROBE twolevel k=$k run$run ${(System.nanoTime() - t0) / 1e9}%.3f s " +
+        f"cells=${r.getLong(0)} hash=${r.getDecimal(1)}")
     }
     spark.stop()
   }

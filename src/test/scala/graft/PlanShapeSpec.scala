@@ -97,6 +97,36 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** Walks AQE's final plan, query stages included. */
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("kNN-graph builds: the vector ⋈ probe-cell join is a shuffle join on centroid_id, never a broadcast") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    // graphTail pins the join so the per-(probe, cell) local top-k
+    // runs inside the join stage; left to the planner, the probe-cell
+    // side broadcasts at every corpus size and the window pays its own
+    // exchange
+    def onCentroid(keys: Seq[Expression]): Boolean = keys.exists {
+      case a: AttributeReference => a.name == "centroid_id"
+      case _ => false
+    }
+    val embs = graft.io.Sources.table(spark, sfDir, "embeddings")
+    for ((name, df) <- Seq(
+        "knn_graph_embeddings" -> SparkEntry.queries("knn_graph_embeddings")(spark, sfDir),
+        "knnGraphHier" -> graft.ext.Similarity.knnGraphHier(embs, k = 4, superK = 4,
+          superProbe = 2))) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val shuffled = Aqe.collect(plan) {
+        case j: SortMergeJoinExec if onCentroid(j.leftKeys) && onCentroid(j.rightKeys) => j
+      }
+      val broadcast = Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }
+      assert(shuffled.size == 1 && broadcast.isEmpty,
+        s"$name: want one sort-merge join on centroid_id and no broadcast join:\n$plan")
+    }
+  }
+
   for ((key, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"plan shape: $key") {
       val df = fn(spark, sfDir)

@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   * The deferred bound under test: fold cost should track the BATCH
   * (its own edges + its own cells' rewrite), not the corpus's
   * affected-vertex re-rank; the refresh carries that re-rank once,
-  * amortized over every fold since the last settle.
+  * amortized over every fold since the last settle. Each arm's layout is
+  * a [[Similarity.knnGraphHier]] build stored under the two-level
+  * assignment ([[Similarity.ivfAssignTwoLevelTo]]) — the production-nc
+  * build path.
   */
 object DeferProbe {
   def main(args: Array[String]): Unit = {
@@ -33,12 +36,12 @@ object DeferProbe {
     val (nBase, nBatch) = (base.count(), batch.count())
     val nc = math.max(16, (nBase / 125).toInt)
     val cents = Similarity.seedCentroids(base, nc)
-    val assigned = Similarity.ivfAssignTwoLevelJoin(base, cents)
+    val assigned = Similarity.ivfAssignTwoLevelTo(base, cents)
     def freshLayout(tag: String): String = {
       val p = java.nio.file.Files.createTempDirectory(s"defer-$tag")
         .resolve("g").toString
       Similarity.writeGraphClustered(
-        Similarity.knnGraphHierJoin(base, k = 4, nCentroids = nc),
+        Similarity.knnGraphHier(base, k = 4, nCentroids = nc),
         assigned, p)
       p
     }

@@ -178,37 +178,37 @@ class HnswPersistSpec extends SparkSpec {
     graft.core.CacheScope.releaseAll()
   }
 
-  test("appendToGraphClustered at PRODUCTION nc (past the literal cliff): two-level kernels, append ≡ the knnGraphHierJoin rebuild over the union (r17)") {
+  test("appendToGraphClustered at PRODUCTION nc (two-level regime): append ≡ the knnGraphHier rebuild over the union (r17)") {
     val maxId = embs.agg(max("vec_id")).collect()(0).getLong(0)
     val arriving = col("vec_id") >= maxId - maxId / 50
     val base = embs.filter(!arriving)
     val batch = embs.filter(arriving)
     assert(batch.count() > 0)
-    // nc chosen PAST the literal-plan cliff (2·nc·dim > 50000) but
-    // under the base's size so the frozen lowest-nc seed set equals
-    // the union's (the high-id tail invariant)
+    // nc chosen inside appendKernels' two-level regime (2·nc·dim past
+    // GraphLiteralMaxTerms) but under the base's size so the frozen
+    // lowest-nc seed set equals the union's (the high-id tail invariant)
     val nc = 400
     val cents = Similarity.seedCentroids(base, nc)
     assert(cents.size == nc &&
       2L * cents.size * cents.head._2.length > Similarity.GraphLiteralMaxTerms,
-      s"fixture under the cliff: ${cents.size} x ${cents.head._2.length}")
+      s"fixture in the flat regime: ${cents.size} x ${cents.head._2.length}")
     val root = java.nio.file.Files.createTempDirectory("graft-gprod")
     val p = root.resolve("g").toString
     // an ARBITRARY deterministic placement (not the append's argmin) —
     // the stored-cell derivation must place affected vertices where
     // the LAYOUT says, and placement never changes the edge ROWS
     Similarity.writeGraphClustered(
-      Similarity.knnGraphHierJoin(base, k = 4, nCentroids = nc),
+      Similarity.knnGraphHier(base, k = 4, nCentroids = nc),
       base.select(col("vec_id"), (col("vec_id") % 29).as("centroid_id")), p)
     Similarity.appendToGraphClustered(spark, p, base, batch, cents, k = 4)
     val appended = spark.read.parquet(p)
       .select("probe_id", "vec_id", "label", "cosine")
       .orderBy(col("probe_id"), col("cosine").desc, col("vec_id"))
       .collect().map(_.toSeq).toSeq
-    val rebuilt = Similarity.knnGraphHierJoin(embs, k = 4, nCentroids = nc)
+    val rebuilt = Similarity.knnGraphHier(embs, k = 4, nCentroids = nc)
       .collect().map(_.toSeq).toSeq
     assert(appended == rebuilt,
-      "production-nc append diverged from the hier-join rebuild")
+      "production-nc append diverged from the hier rebuild")
     graft.core.CacheScope.releaseAll()
   }
 
@@ -227,9 +227,12 @@ class HnswPersistSpec extends SparkSpec {
     // alone, then replay the whole batch through the face
     Similarity.appendToGraphClustered(spark, s"$hPath/l0", base, batch,
       cents, k = 4)
-    val cells = graft.streaming.StreamGraphMaintain.maintainBatchHnsw(
-      spark, batch, index, vPath, hPath)
+    val (cells, replayJobs) = jobsRun(
+      graft.streaming.StreamGraphMaintain.maintainBatchHnsw(
+        spark, batch, index, vPath, hPath))
     assert(cells.nonEmpty)
+    // exact pin: a change in the count is a plan change to explain
+    assert(replayJobs == 12, s"crash replay ran $replayJobs jobs")
     val idx = Similarity.readHnswClustered(spark, hPath)
     val rebuilt = Similarity.hnswLayerGraphs(embs, levels = 2, ratio = 4,
       k = 4)

@@ -740,32 +740,6 @@ class SimilaritySpec extends SparkSpec {
     assert(kept.nonEmpty)
   }
 
-  test("join assignment: bit-identical to the literal two-level path") {
-    val index = Similarity.buildIvfIndex(embs, nCentroids = 16, iterations = 3,
-      portable = true)
-    val literal = Similarity.ivfAssignTwoLevelTo(embs, index.centroids)
-      .select("vec_id", "centroid_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val joined = Similarity.ivfAssignTwoLevelJoin(embs, index.centroids)
-    assert(joined.columns.toSet ==
-      Set("vec_id", "embedding", "label", "centroid_id"))
-    val got = joined.select("vec_id", "centroid_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // same floats through the same cosine kernel, same (d, cid) argmin
-    // ordering — the join evaluation must not move a single vector
-    assert(got == literal)
-  }
-
-  test("semanticPairsHierJoin: identical pair rows to semanticPairsHier") {
-    val index = Similarity.buildIvfIndex(embs, nCentroids = 16, iterations = 3,
-      portable = true)
-    val lit = Similarity.semanticPairsHier(embs, index).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val jn = Similarity.semanticPairsHierJoin(embs, index).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(jn.nonEmpty && jn.toSeq == lit.toSeq)
-  }
-
   test("sampled trainer: recovers well-separated clusters; sampling path is sound") {
     import spark.implicits._
     // 4 orthogonal tight clusters (dim 8), cluster = vec_id % 4 so the
@@ -785,7 +759,7 @@ class SimilaritySpec extends SparkSpec {
     val full = Similarity.kMeansCentroidsSampled(
       df, nCentroids = 4, iterations = 3, samplePerCell = 1000)
     assert(full.size == 4 && full.forall(_._2.length == dim))
-    val assignedFull = Similarity.ivfAssignTwoLevelJoin(df, full)
+    val assignedFull = Similarity.ivfAssignTwoLevelTo(df, full)
       .select("label", "centroid_id").collect()
       .map(r => r.getInt(0) -> r.getLong(1))
     val byCluster = assignedFull.groupBy(_._1).map { case (c, xs) =>
@@ -804,7 +778,7 @@ class SimilaritySpec extends SparkSpec {
       df, nCentroids = 4, iterations = 3, samplePerCell = 8)
     assert(sampled.size == 4 && sampled.forall(_._2.length == dim))
     val validIds = sampled.map(_._1).toSet
-    val assignedSampled = Similarity.ivfAssignTwoLevelJoin(df, sampled)
+    val assignedSampled = Similarity.ivfAssignTwoLevelTo(df, sampled)
       .select("vec_id", "centroid_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(assignedSampled.length == 200)
@@ -1019,23 +993,6 @@ class SimilaritySpec extends SparkSpec {
     assert(agree >= 0.55, s"hier/flat edge agreement too low: $agree")
   }
 
-  test("knnGraphHierJoin: probe-lists-as-data is bit-identical to the literal two-level path (r13 verdict #2)") {
-    // superK=4, superProbe=2 → 4 super-cells, 2 probed: BOTH variants
-    // take the real two-level path (literal CASE chains vs broadcast
-    // joins) and must produce the same edges bit-for-bit — same probed
-    // cell sets, same assignments, same 6-dp ranking
-    def edges(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
-    val lit2 = edges(Similarity.knnGraphHier(embs, k = 4, superK = 4, superProbe = 2))
-    val join2 = edges(Similarity.knnGraphHierJoin(embs, k = 4, superK = 4, superProbe = 2))
-    assert(join2 == lit2, "join-shaped hier graph diverged from the literal two-level path")
-    // fallback parity: probing ALL supers degrades the join variant to
-    // the flat graph exactly, like the literal variant
-    val flat4 = edges(Similarity.knnGraph(embs, k = 4))
-    val joinAll = edges(Similarity.knnGraphHierJoin(embs, k = 4, superK = 4, superProbe = 4))
-    assert(joinAll == flat4, "all-supers-probed join variant diverged from flat")
-  }
-
   test("knnGraphHier: measured edge recall vs flat on a clustered fixture at k ∝ n (r13 verdict #6)") {
     import spark.implicits._
     // 16 tight Gaussian clusters in 64-dim (near-orthogonal centers —
@@ -1063,11 +1020,6 @@ class SimilaritySpec extends SparkSpec {
     info(f"hier edge recall vs flat (clustered, n=800, nc=$nc, k=$k): $recall%.4f")
     assert(recall >= 0.9,
       f"hier edge recall vs flat on clustered data: $recall%.4f (need >= 0.9)")
-    // the join-shaped variant is bit-identical to hier at this k too
-    val hierJoin = Similarity.knnGraphHierJoin(rows, k = k, nCentroids = nc)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(hierJoin.toSeq == hier.toSeq,
-      "join variant diverged from literal hier at nc=64")
   }
 
   test("knnGraphRefine: one NN-Descent round improves recall vs the exact graph (r14)") {
