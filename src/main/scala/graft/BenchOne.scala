@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual declared queries in isolation (N repeats,
-  * noop sink, same session config as [[Bench]]) — for chasing a single
-  * query's regression without paying the full declared-query sweep.
+  * noop sink, on the [[Harness]] session and warm-up that [[Bench]]
+  * uses) — for chasing a single query's regression without paying the
+  * full declared-query sweep.
   *
   * Usage: `sbt "runMain graft.BenchOne <sfDir> <repeats> <key ...>"`
   */
@@ -13,28 +13,12 @@ object BenchOne {
     val sfDir = args(0)
     val repeats = args(1).toInt
     val keys = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ExtraConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try graft.io.Sources.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    keys.foreach(Harness.query)
+    val spark = Harness.session(Harness.cpus)
+    Harness.warmUp(spark, sfDir)
     for (key <- keys; i <- 1 to repeats) {
-      val fn = SparkEntry.queries.getOrElse(key,
-        sys.error(s"unknown query key: $key"))
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      println(f"BENCHONE $key run$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      graft.core.CacheScope.releaseAll(blocking = true)
-      spark.catalog.clearCache()
+      val sec = Harness.timeKey(spark, sfDir, key)
+      println(f"BENCHONE $key run$i $sec%.3f s")
     }
     spark.stop()
   }

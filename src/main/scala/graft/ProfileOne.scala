@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one declared query with a listener that prints per-job
   * wall time, stage task time, and shuffle bytes — the "which stage eats
   * the seconds" view the optimization guide (§1) asks for before any
-  * change. Same session config as [[Bench]].
+  * change. Runs on the [[Harness]] session and warm-up that [[Bench]]
+  * uses.
   *
   * Usage: `sbt "runMain graft.ProfileOne <sfDir> <key ...>"`
   */
@@ -15,20 +15,9 @@ object ProfileOne {
     require(args.length >= 2, "usage: ProfileOne <sfDir> <key ...>")
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ExtraConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try graft.io.Sources.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    keys.foreach(Harness.query)
+    val spark = Harness.session(Harness.cpus)
+    Harness.warmUp(spark, sfDir)
     final case class StageAgg(
       var taskMs: Long = 0L, var shufRead: Long = 0L, var shufWrite: Long = 0L,
       var input: Long = 0L, var nTasks: Int = 0, var name: String = "",
@@ -76,15 +65,9 @@ object ProfileOne {
     spark.sparkContext.addSparkListener(listener)
     for (key <- keys) {
       jobs.clear(); stages.clear(); jobLines.clear(); jobSites.clear()
-      val fn = SparkEntry.queries.getOrElse(key,
-        sys.error(s"unknown query key: $key"))
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val total = (System.nanoTime() - t0) / 1e9
-      graft.core.CacheScope.releaseAll(blocking = true)
-      spark.catalog.clearCache()
+      val total = Harness.timeKey(spark, sfDir, key)
       // listener bus is async — let the tail events drain
-      Thread.sleep(500)
+      org.apache.spark.sql.GraftBridge.waitListeners(spark)
       println(f"PROFILE $key total=$total%.3f s jobs=${jobs.size}")
       import scala.jdk.CollectionConverters._
       jobSites.asScala.toSeq.sortBy(-_._2._2).take(20).foreach {

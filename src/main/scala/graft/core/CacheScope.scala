@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.control.NonFatal
 
 /** Lifecycle registry for DataFrames the engine pins with `persist()`.
   *
@@ -16,10 +17,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
   * queries).
   *
   * Contract: builders call [[persist]] instead of `df.persist()`; the
-  * consumer runs its action, then calls [[releaseAll]] (as `graft.Bench`
-  * and `graft.Verify` do between queries). At cluster scale, where the
-  * pinned frame exceeds the cache tier, set [[StorageDirConf]]:
-  * [[persist]] then checkpoints to storage once and consumers read the
+  * consumer runs its action, then calls [[releaseAll]] (as
+  * `graft.Harness.release` does between queries). At cluster scale,
+  * where the pinned frame exceeds the cache tier, set
+  * [[StorageDirConf]]: [[persist]] then checkpoints to storage once and consumers read the
   * files back — same lifecycle (releaseAll deletes them), durable
   * medium, zero executor-memory pressure.
   */
@@ -81,35 +82,43 @@ object CacheScope {
     * previous query's blocks draining into the NEXT query's timed
     * region: heap pressure + GC billed to the wrong key). Streaming
     * faces keep the non-blocking default.
+    *
+    * Every tracked handle and storage path is attempted even when one
+    * fails; the first failure is then rethrown, with the later ones
+    * attached as suppressed exceptions, so a leaked cache or scope
+    * directory is never silent.
     */
   def releaseAll(blocking: Boolean = false): Unit = {
-    var d = tracked.poll()
-    while (d != null) {
-      try {
+    var first: Throwable = null
+    def attempt(release: => Unit): Unit =
+      try release catch { case NonFatal(e) =>
+        if (first == null) first = e else first.addSuppressed(e)
+      }
+    Iterator.continually(tracked.poll()).takeWhile(_ != null).foreach { d =>
+      attempt {
         d.unpersist(blocking)
         // localCheckpoint'd handles pin at RDD level, invisible to
         // Dataset.unpersist — release those blocks too
         org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(d, blocking)
-      } catch { case _: Throwable => () }
-      d = tracked.poll()
+      }
     }
     // storage-mode scopes: the files ARE the cache — release = delete
-    var e = trackedPaths.poll()
-    while (e != null) {
-      try {
-        val p = new org.apache.hadoop.fs.Path(e._2)
-        p.getFileSystem(e._1.sparkContext.hadoopConfiguration).delete(p, true)
-      } catch { case _: Throwable => () }
-      e = trackedPaths.poll()
+    Iterator.continually(trackedPaths.poll()).takeWhile(_ != null).foreach {
+      case (spark, path) => attempt {
+        val p = new org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }
+    if (first != null) throw first
   }
 
   /** Run `body` (which should END IN AN ACTION — the scope cannot help
     * a lazy plan that escapes it), then release everything persisted
-    * during it. For library callers who want try/finally hygiene.
+    * during it. For library callers who want try/finally hygiene; a
+    * release failure after a failed body is attached to its exception.
     */
   def scoped[T](body: => T): T =
-    try body finally releaseAll()
+    scala.util.Using.resource(())(_ => body)(_ => releaseAll())
 
   /** Crash recovery for the storage escape: delete every `scope-*` dir
     * under the configured storage dir. [[releaseAll]]'s path queue is

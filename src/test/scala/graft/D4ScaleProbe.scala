@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ext.Similarity
 
 /** Scale probe (Test/runMain graft.D4ScaleProbe <sfDir> <nc...>):
@@ -27,11 +25,7 @@ object D4ScaleProbe {
         (parts(0).toInt, if (parts.length > 1) parts(1) else "flat")
       }
       else Seq((16, "flat"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val e = graft.io.Sources.table(spark, sfDir, "embeddings")
     e.count()
     for ((nc, mode) <- specs; run <- 1 to 3) {
@@ -41,8 +35,7 @@ object D4ScaleProbe {
         case _      => Similarity.d4Select(e, nCentroids = nc).count()
       }
       println(f"D4PROBE sf=$sfDir nc=$nc mode=$mode run$run ${(System.nanoTime() - t0) / 1e9}%.3f s ($n verdicts)")
-      graft.core.CacheScope.releaseAll()
-      spark.catalog.clearCache()
+      Harness.release(spark)
     }
     spark.stop()
   }

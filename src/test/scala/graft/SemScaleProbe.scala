@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ext.Similarity
 
 /** Scale probe (Test/runMain graft.SemScaleProbe <sfDir> <spec...>):
@@ -30,11 +28,7 @@ object SemScaleProbe {
         (parts(0).toInt, if (parts.length > 1) parts(1) else "flat")
       }
       else Seq((160, "flat"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val e = graft.io.Sources.table(spark, sfDir, "embeddings")
     e.count()
     for ((nc, mode) <- specs; run <- 1 to 3) {
@@ -55,8 +49,7 @@ object SemScaleProbe {
       val t2 = System.nanoTime()
       println(f"SEMSCALE nc=$nc mode=$mode run$run train ${(t1 - t0) / 1e9}%.3f s " +
         f"pairs ${(t2 - t1) / 1e9}%.3f s pairs=$n")
-      graft.core.CacheScope.releaseAll()
-      spark.catalog.clearCache()
+      Harness.release(spark)
     }
     spark.stop()
   }

@@ -21,7 +21,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (isDatabase) s"$name.db" else name))
   }
 
-  private def deleteTree(root: java.nio.file.Path): Unit =
+  /** Delete `root` and everything under it, if it exists. */
+  protected def deleteTree(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) {
       import scala.jdk.CollectionConverters._
       val s = java.nio.file.Files.walk(root)
@@ -79,16 +80,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** A fixed 4 cores, whatever the host: spec job budgets and
+    * `PlanShapeSpec`'s plans depend on the shuffle width.
+    */
+  lazy val session: SparkSession = Harness.session(4)
 }

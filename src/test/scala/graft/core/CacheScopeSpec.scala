@@ -94,6 +94,35 @@ class CacheScopeSpec extends SparkSpec {
     }
   }
 
+  test("releaseAll attempts every handle and scope dir, then throws the first failure") {
+    CacheScope.releaseAll()
+    val base = spark.sparkContext.getPersistentRDDs.keySet
+    val dir = java.nio.file.Files.createTempDirectory("cache_refusing")
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("fs.faildelete.impl", classOf[ScopeDeleteRefusingFileSystem].getName)
+    try {
+      import spark.implicits._
+      val cached = (1 to 50).toDF("n").transform(CacheScope.persist)
+      assert(cached.count() == 50)
+      spark.conf.set(CacheScope.StorageDirConf, s"faildelete://$dir")
+      (1 to 10).toDF("n").transform(CacheScope.persist)
+      (11 to 20).toDF("n").transform(CacheScope.persist)
+      spark.conf.unset(CacheScope.StorageDirConf)
+      assert(CacheScope.trackedCount == 3)
+      val e = intercept[java.io.IOException](CacheScope.releaseAll())
+      assert(e.getMessage.contains("scope-"), e.getMessage)
+      // the second refused directory was attempted too
+      assert(e.getSuppressed.length == 1, e.getSuppressed.toSeq)
+      assert(CacheScope.trackedCount == 0)
+      val held = spark.sparkContext.getPersistentRDDs.keySet -- base
+      assert(held.isEmpty, s"in-memory handles left persisted: $held")
+    } finally {
+      spark.conf.unset(CacheScope.StorageDirConf)
+      hadoopConf.unset("fs.faildelete.impl")
+      deleteTree(dir)
+    }
+  }
+
   test("scoped releases on exit even when body throws") {
     import spark.implicits._
     intercept[RuntimeException] {
@@ -105,4 +134,14 @@ class CacheScopeSpec extends SparkSpec {
     }
     assert(CacheScope.trackedCount == 0)
   }
+}
+
+/** The local file system under a `faildelete:` scheme, refusing to
+  * delete [[CacheScope]]'s storage-scope directories (`scope-*`).
+  */
+class ScopeDeleteRefusingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faildelete:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (p.getName.startsWith("scope-")) throw new java.io.IOException(s"delete refused: $p")
+    else super.delete(p, recursive)
 }

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,12 +23,7 @@ object BpeScaleProbe {
     }
     val mergeCounts =
       if (mergeArgs.nonEmpty) mergeArgs.map(_.toInt) else Seq(8, 256, 1024)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val docs = graft.io.Sources.table(spark, sfDir, "documents")
     docs.count()
     // digits survive the split (r15): the sf10/sf100 replica corpora

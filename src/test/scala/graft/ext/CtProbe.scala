@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Stage probe for the composed corpus→trainer key (Test/runMain
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions.col
 object CtProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val d = graft.io.Sources.table(spark, sfDir, "documents")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -39,8 +33,7 @@ object CtProbe {
       t(s"p$pass composed_key")(Corpus.corpusToTrainer(
         d.filter(col("doc_id") % 97 =!= 0),
         d.filter(col("doc_id") % 97 === 0)).count())
-      graft.core.CacheScope.releaseAll()
-      spark.catalog.clearCache()
+      graft.Harness.release(spark)
     }
     spark.stop()
   }

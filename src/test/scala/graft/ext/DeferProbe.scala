@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe (Test/runMain graft.ext.DeferProbe <sfDir>): the r17
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
 object DeferProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/testdata/sf10")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val e = graft.io.Sources.table(spark, sfDir, "embeddings")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = e.count()

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe (Test/runMain graft.ext.HnswScaleProbe <sfDir> [probes]):
@@ -19,12 +18,7 @@ object HnswScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nProbes = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val e = graft.io.Sources.table(spark, sfDir, "embeddings")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = e.count()

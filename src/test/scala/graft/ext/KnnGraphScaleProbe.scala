@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe (Test/runMain graft.ext.KnnGraphScaleProbe <sfDir> <nc...>):
@@ -27,12 +26,7 @@ object KnnGraphScaleProbe {
         (parts(0).toInt, if (parts.length > 1) parts(1) else "flat")
       }
       else Seq((16, "flat"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val e = graft.io.Sources.table(spark, sfDir, "embeddings")
     val n = e.count()
     for ((nc, mode) <- specs; run <- 1 to 3) {
@@ -49,8 +43,7 @@ object KnnGraphScaleProbe {
       val tg = (System.nanoTime() - t0) / 1e9
       println(f"KNNGRAPH $sfDir n=$n nc=$nc:$mode run$run graph=$tg%.3f s " +
         f"(edges=${r.getLong(0)} hash=${r.getDecimal(1)})")
-      graft.core.CacheScope.releaseAll()
-      spark.catalog.clearCache()
+      graft.Harness.release(spark)
     }
     spark.stop()
   }
